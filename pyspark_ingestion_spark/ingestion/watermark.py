@@ -98,6 +98,57 @@ def _hadoop_fs(table_path: str, spark=None):
     return jvm, fs, jpath
 
 
+def read_state_json(path: str, spark=None):
+    """The JSON document at ``path``, or ``None`` if it does not exist.
+    Local paths use plain ``os``; URI paths (``scheme://...``) go through
+    the Hadoop FileSystem of the active (or passed) SparkSession."""
+    if _is_uri(path):
+        jvm, fs, jpath = _hadoop_fs(path, spark)
+        if not fs.exists(jpath):
+            return None
+        stream = fs.open(jpath)
+        try:
+            return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+        finally:
+            stream.close()
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_state_json(path: str, doc, spark=None) -> None:
+    """Persist a small driver-side state document atomically: write
+    ``<path>.tmp``, then replace ``path`` with it. A crash mid-write
+    leaves at worst a stray tmp file, never a truncated ``path`` that
+    would make every later read raise.
+
+    On URI paths the same tmp-write → delete → rename dance runs through
+    Hadoop FileSystem. Rename is atomic on HDFS/file; object stores make
+    it copy+delete, so the window there is (delete, rename) — a crash
+    inside it loses the document (readers then see it as absent), but
+    never leaves it truncated."""
+    payload = json.dumps(doc, indent=2)
+    tmp = path + ".tmp"
+    if _is_uri(path):
+        jvm, fs, jpath = _hadoop_fs(path, spark)
+        jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
+        out = fs.create(jtmp, True)
+        try:
+            out.write(payload.encode("utf-8"))
+        finally:
+            out.close()
+        if fs.exists(jpath):
+            fs.delete(jpath, False)
+        if not fs.rename(jtmp, jpath):
+            raise IOError(f"rename {tmp} -> {path} failed")
+        return
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with open(tmp, "w") as f:
+        f.write(payload)
+    os.replace(tmp, path)
+
+
 def read_watermark(
     table_path: str,
     system: str,
@@ -112,56 +163,21 @@ def read_watermark(
     paths use plain ``os``; URI paths (``scheme://...``) go through the
     Hadoop FileSystem of the active (or passed) SparkSession.
     """
-    if _is_uri(table_path):
-        jvm, fs, jdir = _hadoop_fs(table_path, spark)
-        jfile = jvm.org.apache.hadoop.fs.Path(jdir, SYNC_FILENAME)
-        if fs.exists(jfile):
-            stream = fs.open(jfile)
-            try:
-                raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            finally:
-                stream.close()
-            return Watermark.from_dict(json.loads(raw))
+    doc = read_state_json(os.path.join(table_path, SYNC_FILENAME), spark)
+    if doc is None:
         return Watermark(system, table_name, ref_column, ref_first_value)
-    path = os.path.join(table_path, SYNC_FILENAME)
-    if os.path.exists(path):
-        with open(path) as f:
-            return Watermark.from_dict(json.load(f))
-    return Watermark(system, table_name, ref_column, ref_first_value)
+    return Watermark.from_dict(doc)
 
 
 def write_watermark(wm: Watermark, table_path: str, spark=None) -> None:
     """Persist the watermark after a successful write (reference ingestion.py:161-164).
 
-    Written atomically (tmp + rename) so a crash mid-write can't corrupt
-    state; a crash *between* data write and watermark write re-ingests
-    the last batch, which the dynamic-partition-overwrite writer makes
-    idempotent (SURVEY §4 O-GAP6).
-
-    On URI paths the same tmp-write → delete → rename dance runs through
-    Hadoop FileSystem. Rename is atomic on HDFS/file; object stores make
-    it copy+delete, so the window there is (delete, rename) — a crash
-    inside it loses only the watermark, and the re-ingest that follows
-    re-initialization is idempotent by the same argument as above.
+    Written atomically (:func:`write_state_json`) so a crash mid-write
+    can't corrupt state; a crash *between* data write and watermark
+    write re-ingests the last batch, which the dynamic-partition-overwrite
+    writer makes idempotent (SURVEY §4 O-GAP6). On object stores a crash
+    inside the (delete, rename) window loses only the watermark, and the
+    re-ingest that follows re-initialization is idempotent by the same
+    argument.
     """
-    if _is_uri(table_path):
-        jvm, fs, jdir = _hadoop_fs(table_path, spark)
-        jfile = jvm.org.apache.hadoop.fs.Path(jdir, SYNC_FILENAME)
-        jtmp = jvm.org.apache.hadoop.fs.Path(jdir, SYNC_FILENAME + ".tmp")
-        payload = json.dumps(wm.to_dict(), indent=2).encode("utf-8")
-        out = fs.create(jtmp, True)
-        try:
-            out.write(payload)
-        finally:
-            out.close()
-        if fs.exists(jfile):
-            fs.delete(jfile, False)
-        if not fs.rename(jtmp, jfile):
-            raise IOError(f"rename {jtmp} -> {jfile} failed")
-        return
-    os.makedirs(table_path, exist_ok=True)
-    path = os.path.join(table_path, SYNC_FILENAME)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(wm.to_dict(), f, indent=2)
-    os.replace(tmp, path)
+    write_state_json(os.path.join(table_path, SYNC_FILENAME), wm.to_dict(), spark)

@@ -12,95 +12,245 @@ static testdata.
 
 from __future__ import annotations
 
+import contextlib
 import uuid
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_ingestion_spark.ingestion.watermark import (
+    read_state_json,
+    write_state_json,
+)
+
 if TYPE_CHECKING:  # annotation-only: the bloom import stays lazy at runtime
     from pyspark_ingestion_spark.operators.bloom import BloomState
 
 
-import contextlib
+def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+    """Overwrite partition ``__batch_id=<batch_id>`` of ``path`` with
+    ``df`` — the replay contract every per-batch table shares: a
+    replayed batch rewrites exactly its own partition."""
+    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
+
+    overwrite_partitions(
+        df.withColumn("__batch_id", F.lit(batch_id)), path, ["__batch_id"]
+    )
 
 
 @contextlib.contextmanager
-def _overlapped_write(fn, *args):
-    """Run ``fn(*args)`` (an admitted-text/media write) as a concurrent
-    Spark job overlapping the with-body — the index-maintenance chain,
-    which shares nothing with it — and JOIN it before returning, so the
-    replay-overwrite contract and failure semantics are unchanged: the
-    batch completes only when every write has (r11 overlap pattern).
+def _overlapped_writes(batch_id: int):
+    """Run a batch's independent partition writes as concurrent Spark
+    jobs. Yields ``(submit, wait)``: ``submit(name, df, path)`` starts
+    :func:`_write_batch_partition` on its own thread (threads spawn on
+    demand and the default pool width, at least 5, covers the widest
+    sink, so every submitted write overlaps the others and the body);
+    ``wait(*names)`` joins those writes, for a body step that must read
+    what they wrote.
 
-    Error surfacing (r12, ADVICE): if the body raises, the write's
-    outcome is still joined and reported — under the bare
-    ThreadPoolExecutor form, executor shutdown waited for the write but
-    DISCARDED its outcome, so a concurrent write failure was silently
-    masked by the index error (and a write success left a committed
-    out_path partition for a failed batch — recoverable by the replay
-    overwrite, but the batch's error report named the wrong failing
-    sink). Here a write failure rides along as a NOTE on the body's
-    error (r13, ADVICE: the r12 form re-raised body_err from inside
-    the write-error handler, which overwrote body_err.__context__ and
-    truncated whatever chain the index error originally carried — a
-    note surfaces both without touching the chain)."""
+    Every write is joined before the block exits, so a batch completes
+    only when all of its writes have. Each write failure gets the note
+    ``batch <id>: <name> write to <path> failed``. If the body raises,
+    its error is primary and every write failure rides along as a note
+    (its original ``__context__`` chain is left intact); otherwise the
+    first write failure is raised with the rest as notes."""
     import traceback
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=1) as ex:
-        fut = ex.submit(fn, *args)
-        try:
-            yield fut
-        except BaseException as body_err:
+    pending: dict = {}  # name -> (future, path)
+
+    def wait(*names: str) -> None:
+        for name in names:
+            fut, path = pending.pop(name)
             try:
                 fut.result()
-            except Exception as write_err:
-                body_err.add_note(
-                    "concurrent admitted-write also failed: "
-                    + "".join(
-                        traceback.format_exception(write_err)
-                    ).rstrip()
-                )
-            # bare raise: body_err keeps its ORIGINAL __context__/
-            # __cause__ chain either way
-            raise
-        fut.result()
+            except Exception as err:
+                err.add_note(f"batch {batch_id}: {name} write to {path} failed")
+                raise
 
+    def join_all() -> list:
+        errs = []
+        for name in list(pending):
+            try:
+                wait(name)
+            except Exception as err:
+                errs.append(err)
+        return errs
 
-def _note_write_failures(err: BaseException, futs: dict) -> None:
-    """Join every overlapped write and attach any failure as a NOTE on
-    ``err`` (the main-thread error) — the r12/r13 `_overlapped_write`
-    failure-surfacing semantics, generalized to N concurrent writes."""
-    import traceback
-
-    for name, fut in futs.items():
-        try:
-            fut.result()
-        except Exception as write_err:
-            err.add_note(
-                f"concurrent {name} write also failed: "
-                + "".join(traceback.format_exception(write_err)).rstrip()
+    def attach(primary: BaseException, errs: list) -> None:
+        for err in errs:
+            primary.add_note(
+                "concurrent write also failed: "
+                + "".join(traceback.format_exception(err)).rstrip()
             )
 
+    with ThreadPoolExecutor() as ex:
 
-def _join_overlapped_writes(futs: dict) -> None:
-    """Join every overlapped write; raise the FIRST failure with every
-    later failure attached as a note, so a multi-write batch reports
-    all outcomes (the `_overlapped_write` contract, N-ary)."""
-    first_err = None
-    rest: dict = {}
-    for name, fut in futs.items():
-        if first_err is None:
-            try:
-                fut.result()
-            except Exception as write_err:
-                first_err = write_err
-        else:
-            rest[name] = fut
-    if first_err is not None:
-        _note_write_failures(first_err, rest)
-        raise first_err
+        def submit(name: str, df: DataFrame, path: str) -> None:
+            pending[name] = (
+                ex.submit(_write_batch_partition, df, path, batch_id),
+                path,
+            )
+
+        try:
+            yield submit, wait
+        except BaseException as body_err:
+            attach(body_err, join_all())
+            raise
+        errs = join_all()
+        if errs:
+            attach(errs[0], errs[1:])
+            raise errs[0]
+
+
+def _run_foreach_batch(stream_df: DataFrame, checkpoint: str, fn) -> None:
+    """Run one AvailableNow increment of a ``foreachBatch`` sink:
+    ``fn(batch_df, batch_id)`` per micro-batch, offsets and commits in
+    ``checkpoint``."""
+    (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _compaction_schedule(
+    index_path: str | None,
+    compact_every: int | None,
+    compact_major_every: int | None,
+):
+    """Validate an in-sink compaction policy once and return
+    ``batch_id -> None | "minor" | "major"``: a MINOR every
+    ``compact_every`` batches (ids that are positive multiples of it),
+    upgraded to a MAJOR every ``compact_major_every`` (default 8× the
+    minor interval). See :func:`_run_admission_sink`."""
+    if compact_every is not None and (index_path is None or compact_every < 1):
+        raise ValueError("compact_every requires index_path and a positive interval")
+    if compact_major_every is not None and (
+        compact_every is None
+        or compact_major_every < compact_every
+        or compact_major_every % compact_every != 0
+    ):
+        # majors only fire ON compaction batches, so a non-multiple M
+        # would silently degrade the major cadence to lcm(N, M) — and
+        # M=0 would pass the modulo check while never firing (r7 review)
+        raise ValueError(
+            "compact_major_every requires compact_every and must be a "
+            "positive multiple of it (majors run on compaction batches)"
+        )
+    major_every = compact_major_every or (compact_every or 0) * 8
+
+    def schedule(batch_id: int) -> str | None:
+        if not compact_every or batch_id <= 0 or batch_id % compact_every:
+            return None
+        return "major" if batch_id % major_every == 0 else "minor"
+
+    return schedule
+
+
+def _run_admission_sink(
+    stream_df: DataFrame,
+    checkpoint: str,
+    index_path: str | None,
+    schedule,
+    compact_fn,
+    admit_indexed,
+    admit_recompute,
+) -> None:
+    """The batch loop every growing-corpus admission sink (LSH,
+    substring, semantic, fingerprint) runs: each micro-batch is checked
+    against the corpus as of its start (base ∪ everything admitted so
+    far) and the survivors are appended.
+
+    Forms. With ``index_path`` (the production form) the sink's
+    corpus-side index is maintained incrementally next to the corpus and
+    ``admit_indexed(batch_df, batch_id)`` runs; without it the reference
+    form ``admit_recompute(batch_df, batch_id)`` (:func:`_admit_recompute`)
+    re-derives the corpus side per batch. Both forms admit the same
+    documents (pinned in tests/test_streaming.py).
+
+    Replay contract (exactly-once). Every table a batch writes — the
+    admitted rows and each index table — is partitioned by
+    ``__batch_id`` and written with dynamic partition overwrite, so a
+    replayed micro-batch (restart between the sink write and the
+    checkpoint commit) rewrites its own partitions instead of
+    duplicating. Every corpus and index READ excludes the current batch
+    id's partition: on replay the first attempt's output is already on
+    disk, and counting it as corpus would make the batch's own docs
+    reject themselves and overwrite the partition with nothing.
+
+    Compaction schedule (indexed form only; :func:`_compaction_schedule`).
+    At the START of batch b, when ``schedule(b)`` names a level,
+    ``compact_fn(spark, index_path, checkpoint=..., on_uncommitted="skip",
+    mode=level)`` folds the index's per-batch partitions — inside the
+    same foreachBatch serialization domain as every index read and
+    write, so the stream never pauses and nothing reads the index
+    mid-overwrite. A MINOR folds only the delta partitions since the
+    last fold into one segment (O(deltas) rewrite, the base untouched);
+    a MAJOR folds segments and deltas into the base, bounding segment
+    count. Per-batch read cost between majors is O(base + k segments +
+    N deltas) partitions — flat in stream length; amortized write cost
+    is the standard LSM trade. Uncommitted partitions — exactly this
+    batch's own, when the compaction batch is a replay — are skipped,
+    not folded, preserving the replay read's self-exclusion; a crash
+    mid-compaction resumes from the write-ahead staging on the replay
+    of the same batch, before any index read of that replay."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if index_path is None:
+            admit_recompute(batch_df, batch_id)
+            return
+        mode = schedule(batch_id)
+        if mode:
+            compact_fn(
+                batch_df.sparkSession, index_path, checkpoint=checkpoint,
+                on_uncommitted="skip", mode=mode,
+            )
+        admit_indexed(batch_df, batch_id)
+
+    _run_foreach_batch(stream_df, checkpoint, sink)
+
+
+def _admit_recompute(
+    batch_df: DataFrame,
+    batch_id: int,
+    base: DataFrame,
+    out_path: str,
+    cols: tuple,
+    rejects_fn,
+) -> None:
+    """One micro-batch of an admission sink's reference (recompute)
+    form: reject ``batch_df`` against base ∪ everything admitted so far,
+    re-deriving the corpus side from scratch, and write the survivors.
+    ``cols`` are the corpus columns, id first; ``rejects_fn(corpus,
+    batch)`` returns the rejected ids under ``cols[0]``. Module-level so
+    the replay path is directly testable: calling it twice with the same
+    ``batch_id`` reproduces (never erases) the first attempt's output."""
+    from pyspark.errors import AnalysisException
+
+    spark = batch_df.sparkSession
+    # one source evaluation per batch (r14, guide §4): the batch feeds
+    # the rejects subquery and the admitted anti-join + write
+    batch = batch_df.localCheckpoint(eager=True)
+    corpus = base.select(*cols)
+    try:
+        # EXCLUDE this batch's own partition (replay contract,
+        # _run_admission_sink)
+        prev = spark.read.parquet(out_path).filter(
+            F.col("__batch_id").cast("long") != batch_id
+        )
+        corpus = corpus.unionByName(
+            prev.select(*[F.col(c).cast(t).alias(c) for c, t in corpus.dtypes])
+        )
+    except AnalysisException:  # first batch: nothing admitted yet
+        pass
+    rejects = rejects_fn(corpus, batch)
+    _write_batch_partition(
+        batch.join(F.broadcast(rejects), cols[0], "left_anti"), out_path, batch_id
+    )
 
 
 def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -232,6 +382,9 @@ def stream_ingest_partitioned(
     q.awaitTermination()
 
 
+_GUARD_FILE = "_partition_guard.json"
+
+
 def stream_foreach_batch_overwrite(
     stream_df: DataFrame,
     path: str,
@@ -251,6 +404,7 @@ def stream_foreach_batch_overwrite(
     """
     from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
+    guard = f"{checkpoint}/{_GUARD_FILE}"
     # REQUIREMENT: partition_columns must be batch-aligned (each partition
     # value appears in at most one micro-batch — e.g. an ingest-date or
     # source-file column). If two batches carried rows of the same
@@ -270,7 +424,9 @@ def stream_foreach_batch_overwrite(
             tuple(str(r[c]) for c in partition_columns)
             for r in batch_df.select(*partition_columns).distinct().collect()
         }
-        owners = _read_partition_guard(checkpoint, batch_df.sparkSession)
+        spark = batch_df.sparkSession
+        # partition key -> owning batch id
+        owners = {k: int(v) for k, v in (read_state_json(guard, spark) or {}).items()}
         clash = {p for p in parts if owners.get("|".join(p), batch_id) != batch_id}
         if clash:
             raise ValueError(
@@ -282,16 +438,10 @@ def stream_foreach_batch_overwrite(
         owners.update({"|".join(p): batch_id for p in parts})
         # guard-then-write: a crash after the guard write replays with the
         # same batch id, which the guard admits
-        _write_partition_guard(checkpoint, owners, batch_df.sparkSession)
+        write_state_json(guard, owners, spark)
         overwrite_partitions(batch_df, path, partition_columns)
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(stream_df, checkpoint, sink)
 
 
 def stream_cdc_upsert(
@@ -331,13 +481,7 @@ def stream_cdc_upsert(
             delete_col=delete_col,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(stream_df, checkpoint, sink)
 
 
 def stream_dedup_admission(
@@ -365,6 +509,8 @@ def stream_dedup_admission(
     against a GROWING corpus (base + everything admitted so far) and the
     survivors are appended — the streaming form of
     ``dedup_incremental_lsh`` (``operators/dedup.incremental_lsh_rejects``).
+    Batch loop, replay contract and compaction schedule:
+    :func:`_run_admission_sink`.
 
     Semantics per micro-batch: admitted = batch ∖ rejects(base ∪
     previously-admitted). Batch-INTERNAL near-dups are both admitted
@@ -373,18 +519,6 @@ def stream_dedup_admission(
     dedup is required. Equivalence with a sequential batch-mode loop
     over the same micro-batches is pinned in tests/test_streaming.py,
     including a checkpoint restart.
-
-    Exactly-once: each batch writes partition ``__batch_id=<id>`` with
-    dynamic partition overwrite, so a replayed micro-batch (restart
-    between sink write and checkpoint commit) rewrites its own partition
-    instead of duplicating — same contract as
-    ``stream_foreach_batch_overwrite``, and batch ids are unique by
-    construction here. Crucially the growing-corpus read EXCLUDES the
-    current batch id's partition: on replay the first attempt's output
-    is already on disk, and counting it as corpus would make the batch's
-    own docs reject themselves at Jaccard 1 and overwrite the partition
-    with nothing — replay must reproduce the first attempt, not erase it
-    (idempotence pinned in tests/test_streaming.py).
 
     100 TB shape: the admission cost is O(batch bands ⋈ corpus band
     table + verify on collisions). With ``index_path`` set (the
@@ -395,10 +529,9 @@ def stream_dedup_admission(
     the corpus text; see :func:`_admit_dedup_batch_indexed`. Without
     ``index_path`` the reference recompute form runs: the band table is
     re-derived per batch from (base ∪ admitted) — fine for bounded local
-    corpora, O(corpus) per batch at scale. Both forms admit the same
-    documents (equivalence pinned in tests/test_streaming.py). The
-    dedup shingle caches are released after every batch so a long-lived
-    stream never accumulates CacheManager entries.
+    corpora, O(corpus) per batch at scale. The dedup shingle caches are
+    released after every batch so a long-lived stream never accumulates
+    CacheManager entries.
 
     ``index_mode`` picks the index maintenance strategy:
     ``"fingerprint"`` (default — staleness detected per batch by
@@ -407,33 +540,11 @@ def stream_dedup_admission(
     + a hot-transition log remove the read path's corpus-wide
     aggregates entirely; measured A/B in SCALING.md).
 
-    ``compact_every`` (indexed forms only): AUTO-COMPACT the index from
-    INSIDE the sink every N batches — :func:`compact_admission_index`
-    runs at the START of every batch whose id is a positive multiple of
-    N, i.e. inside the same foreachBatch serialization domain as every
-    index read and write, so no maintenance window is ever needed: the
-    stream never pauses, nothing reads the index mid-overwrite, and
-    per-batch cost stays FLAT with stream length instead of growing
-    O(versions) in the bands max and O(batches) in the dfcnt scan and
-    the postings/hot small-file counts (measured over 64 batches in
-    SCALING.md). Uncommitted partitions — exactly this batch's own,
-    when the compaction batch is a REPLAY — are skipped, not folded
-    (``on_uncommitted="skip"``), preserving the replay read's
-    ``!= batch_id`` self-exclusion; every committed partition folds on
-    the next trigger. A crash mid-compaction resumes from the
-    write-ahead staging on the replay of the same batch, BEFORE any
-    index read of that replay.
-
-    Write amplification is LSM-tiered: the every-N compaction is a
-    MINOR — it folds only the delta partitions since the last fold into
-    one segment, O(deltas) rewrite, never touching the (corpus-sized)
-    base — while every ``compact_major_every`` batches (default 8·N) a
-    MAJOR folds segments + deltas into the base, bounding segment
-    count. Per-batch read cost between majors is O(base + k segments +
-    N deltas) partitions with k ≤ major/minor ratio — flat in stream
-    LENGTH; amortized write cost is O(batch) from minors plus
-    O(corpus / major interval) from majors, the standard LSM trade and
-    the only shape that survives a never-pausing 100 TB stream.
+    ``compact_every`` / ``compact_major_every`` (indexed forms only)
+    fold the index with :func:`compact_admission_index`; without it the
+    per-batch cost grows O(versions) in the bands max and O(batches) in
+    the dfcnt scan and the postings/hot small-file counts (measured over
+    64 batches in SCALING.md).
 
     ``bucket_cap_mode="salt"`` (r12): inside an oversized corpus band
     bucket, salt-split instead of drop — each batch doc probes
@@ -446,91 +557,21 @@ def stream_dedup_admission(
     per mode.
     """
     _validate_index_mode(index_mode, max_doc_freq)
-    if compact_every is not None and (
-        index_path is None or compact_every < 1
-    ):
-        raise ValueError(
-            "compact_every requires index_path and a positive interval"
-        )
-    if compact_major_every is not None and (
-        compact_every is None
-        or compact_major_every < compact_every
-        or compact_major_every % compact_every != 0
-    ):
-        # majors only fire ON compaction batches, so a non-multiple M
-        # would silently degrade the major cadence to lcm(N, M) — and
-        # M=0 would pass the modulo check while making major_every falsy
-        # (majors silently never run; r7 review)
-        raise ValueError(
-            "compact_major_every requires compact_every and must be a "
-            "positive multiple of it (majors run on compaction batches)"
-        )
-    major_every = (
-        compact_major_every
-        if compact_major_every is not None
-        else (compact_every * 8 if compact_every else None)
+    schedule = _compaction_schedule(index_path, compact_every, compact_major_every)
+    kw = dict(
+        id_col=id_col, text_col=text_col, n=n, num_hashes=num_hashes,
+        band_size=band_size, threshold_num=threshold_num,
+        threshold_den=threshold_den, max_doc_freq=max_doc_freq,
+        max_bucket_size=max_bucket_size, bucket_cap_mode=bucket_cap_mode,
+        probe_salts=probe_salts,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if index_path is not None:
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                mode = (
-                    "major"
-                    if major_every and batch_id % major_every == 0
-                    else "minor"
-                )
-                compact_admission_index(
-                    batch_df.sparkSession,
-                    index_path,
-                    checkpoint=checkpoint,
-                    on_uncommitted="skip",
-                    mode=mode,
-                )
-            _admit_dedup_batch_indexed(
-                batch_df,
-                batch_id,
-                base_corpus,
-                out_path,
-                index_path,
-                id_col=id_col,
-                text_col=text_col,
-                n=n,
-                num_hashes=num_hashes,
-                band_size=band_size,
-                threshold_num=threshold_num,
-                threshold_den=threshold_den,
-                max_doc_freq=max_doc_freq,
-                max_bucket_size=max_bucket_size,
-                index_mode=index_mode,
-                bucket_cap_mode=bucket_cap_mode,
-                probe_salts=probe_salts,
-            )
-            return
-        _admit_dedup_batch(
-            batch_df,
-            batch_id,
-            base_corpus,
-            out_path,
-            id_col=id_col,
-            text_col=text_col,
-            n=n,
-            num_hashes=num_hashes,
-            band_size=band_size,
-            threshold_num=threshold_num,
-            threshold_den=threshold_den,
-            max_doc_freq=max_doc_freq,
-            max_bucket_size=max_bucket_size,
-            bucket_cap_mode=bucket_cap_mode,
-            probe_salts=probe_salts,
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_admission_sink(
+        stream_df, checkpoint, index_path, schedule, compact_admission_index,
+        lambda b, i: _admit_dedup_batch_indexed(
+            b, i, base_corpus, out_path, index_path, index_mode=index_mode, **kw
+        ),
+        lambda b, i: _admit_dedup_batch(b, i, base_corpus, out_path, **kw),
     )
-    q.awaitTermination()
 
 
 def _admit_dedup_batch(
@@ -550,61 +591,28 @@ def _admit_dedup_batch(
     bucket_cap_mode: str = "drop",
     probe_salts: int = 4,
 ) -> None:
-    """One micro-batch of ``stream_dedup_admission`` — module-level so
-    the replay path is directly testable: calling it twice with the same
-    ``batch_id`` must reproduce (not erase) the first attempt's output.
-    """
-    from pyspark.errors import AnalysisException
-
+    """One micro-batch of the recompute form of ``stream_dedup_admission``
+    (:func:`_admit_recompute` with the LSH rejects)."""
     from pyspark_ingestion_spark.operators.dedup import (
         incremental_lsh_rejects,
         release_shingle_caches,
         snapshot_shingle_caches,
     )
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     # release only the caches THIS batch creates — a concurrent foreground
     # dedup job's caches must survive the micro-batch commit
     prior_caches = snapshot_shingle_caches()
-    spark = batch_df.sparkSession
-    # one source evaluation per batch (r14, guide §4 — same reasoning
-    # as the indexed form): the batch feeds the LSH rejects subquery
-    # and the admitted anti-join + write
-    batch = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-    corpus = base_corpus.select(id_col, text_col)
     try:
-        # EXCLUDE this batch's own partition: on replay it already holds
-        # the first attempt's output, which must not count as corpus
-        # (self-rejection would erase the partition — see docstring)
-        prev = (
-            spark.read.parquet(out_path)
-            .filter(F.col("__batch_id") != batch_id)
-            .select(id_col, text_col)
-        )
-        corpus = corpus.unionByName(prev)
-    except AnalysisException:  # first batch: nothing admitted yet
-        pass
-    try:
-        rejects = incremental_lsh_rejects(
-            corpus,
-            batch,
-            id_col,
-            text_col,
-            n=n,
-            num_hashes=num_hashes,
-            band_size=band_size,
-            threshold_num=threshold_num,
-            threshold_den=threshold_den,
-            max_doc_freq=max_doc_freq,
-            max_bucket_size=max_bucket_size,
-            bucket_cap_mode=bucket_cap_mode,
-            probe_salts=probe_salts,
-        )
-        admitted = batch.join(F.broadcast(rejects), id_col, "left_anti")
-        overwrite_partitions(
-            admitted.withColumn("__batch_id", F.lit(batch_id)),
-            out_path,
-            ["__batch_id"],
+        _admit_recompute(
+            batch_df.select(id_col, text_col), batch_id, base_corpus, out_path,
+            (id_col, text_col),
+            lambda corpus, batch: incremental_lsh_rejects(
+                corpus, batch, id_col, text_col, n=n, num_hashes=num_hashes,
+                band_size=band_size, threshold_num=threshold_num,
+                threshold_den=threshold_den, max_doc_freq=max_doc_freq,
+                max_bucket_size=max_bucket_size,
+                bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
+            ),
         )
     finally:
         release_shingle_caches(keep=prior_caches)
@@ -718,17 +726,12 @@ def init_dedup_admission_index(
     shingle width ``n`` are baked into the persisted rows.
     """
     from pyspark_ingestion_spark.operators.dedup import _hot_shingles, _shingle_table
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     _validate_index_mode(index_mode, max_doc_freq)
     spark = base_corpus.sparkSession
     base = base_corpus.select(id_col, text_col)
     posts = _shingle_table(base, id_col, text_col, n)
-    overwrite_partitions(
-        posts.withColumn("__batch_id", F.lit(-1)),
-        f"{index_path}/{_IDX_POSTINGS}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(posts, f"{index_path}/{_IDX_POSTINGS}", -1)
     # re-read what was just written so banding doesn't re-shingle the text
     stored = (
         _read_idx_parquet(spark, f"{index_path}/{_IDX_POSTINGS}")
@@ -741,11 +744,7 @@ def init_dedup_admission_index(
         capped = stored.join(hot, "shingle", "left_anti")
     ids = base.select(F.col(id_col).alias("doc"))
     rows = _index_band_rows(capped, ids, num_hashes, band_size)
-    overwrite_partitions(
-        rows.withColumn("__batch_id", F.lit(-1)),
-        f"{index_path}/{_IDX_BANDS}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(rows, f"{index_path}/{_IDX_BANDS}", -1)
     if index_mode == "hotlog":
         cnt = stored.groupBy("shingle").agg(F.count(F.lit(1)).alias("cnt"))
         # same STRICT semantics as _hot_shingles: hot means df > cap.
@@ -762,16 +761,8 @@ def init_dedup_admission_index(
             if max_doc_freq is not None
             else cnt.filter(F.lit(False)).select("shingle")
         )
-        overwrite_partitions(
-            base_hot.withColumn("__batch_id", F.lit(-1)),
-            f"{index_path}/{_IDX_HOT}",
-            ["__batch_id"],
-        )
-        overwrite_partitions(
-            cnt.withColumn("__batch_id", F.lit(-1)),
-            f"{index_path}/{_IDX_DFCNT}",
-            ["__batch_id"],
-        )
+        _write_batch_partition(base_hot, f"{index_path}/{_IDX_HOT}", -1)
+        _write_batch_partition(cnt, f"{index_path}/{_IDX_DFCNT}", -1)
 
 
 def _validate_index_mode(index_mode: str, max_doc_freq: int | float | None) -> None:
@@ -1126,19 +1117,14 @@ def _admit_dedup_batch_indexed(
     """One micro-batch of indexed ``stream_dedup_admission``: admit via
     :func:`_indexed_rejects` (or :func:`_indexed_rejects_hotlog` when
     ``index_mode="hotlog"``), then append the batch's text, postings and
-    band rows — each to its own ``__batch_id`` partition, so the whole
-    triple inherits the replay-overwrite contract of the plain sink
-    (calling twice with the same ``batch_id`` reproduces, never erases).
-    In hotlog mode the write side additionally maintains the df-count
+    band rows — each to its own ``__batch_id`` partition under the
+    replay contract of :func:`_run_admission_sink` (calling twice with
+    the same ``batch_id`` reproduces, never erases). In hotlog mode the write side additionally maintains the df-count
     deltas and the hot-transition log (same partition, same contract),
     re-banding eagerly any docs a cap crossing invalidated — which is
     what lets the NEXT batch's read path skip staleness detection.
-    Module-level for the same direct replay-testability reason as
-    ``_admit_dedup_batch``."""
-    from pyspark.errors import AnalysisException
-
+    Module-level for direct replay testability."""
     from pyspark_ingestion_spark.operators.dedup import _shingle_table
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     _validate_index_mode(index_mode, max_doc_freq)
     spark = batch_df.sparkSession
@@ -1186,25 +1172,18 @@ def _admit_dedup_batch_indexed(
     # materialize once (batch-sized, EAGER): three writes derive from
     # it, the LogicalRDD plan keeps the text write from re-running the
     # LSH, and eager materialization makes the frame safe to consume
-    # from the overlap thread below (lazy first-use is not a
+    # from the overlapped writes below (lazy first-use is not a
     # single-materialization point under concurrency)
     admitted = batch.join(F.broadcast(rejects), id_col, "left_anti").localCheckpoint(
         eager=True
     )
     # r15 (guide §2.6 — overlap independent jobs): the batch's writes
     # are independent of one another in the common no-crossing case —
-    # admitted text (out_path), postings, the dfcnt delta and the fresh
-    # band rows share only the eagerly-checkpointed `admitted` frame
-    # and write to four disjoint tables. The old sequential chain paid
-    # their per-job overheads as a SUM (~2.3 s/batch profiled at bench
-    # scale); submitting them from a pool bounds the write side by the
-    # slowest write instead. Width = the number of independent writes,
-    # not a machine constant. Every write is joined before returning
-    # (replay contract unchanged: partition overwrites, all complete or
-    # the batch raises and replays) and every failure is surfaced
-    # (r12/r13 `_overlapped_write` semantics via the N-ary helpers).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # admitted text (out_path), postings, the dfcnt delta, the fresh
+    # band rows and the hot transitions share only eagerly-checkpointed
+    # frames and write to disjoint tables, so the write side is bounded
+    # by the slowest write instead of the sum of their per-job overheads
+    # (~2.3 s/batch profiled at bench scale when sequential)
     adm_posts = _shingle_table(admitted, id_col, text_col, n)
     admitted_ids = admitted.select(F.col(id_col).alias("doc"))
     band_rows = _index_band_rows(
@@ -1212,95 +1191,51 @@ def _admit_dedup_batch_indexed(
     )
     if stale_rows is not None:  # fingerprint mode's staleness re-bands
         band_rows = band_rows.unionByName(stale_rows)
-    cap = (
-        int(max_doc_freq)
-        if (index_mode == "hotlog" and max_doc_freq is not None)
-        else None
-    )
     newly_hot_plan = None
     batch_cnt = None
     if index_mode == "hotlog":
         batch_cnt = adm_posts.groupBy("shingle").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        if cap is not None:
+        if max_doc_freq is not None:
             # built BEFORE the dfcnt delta write is submitted — the plan
             # excludes this batch's partition and pins its file listing
             # to the pre-write directory state (no commit/listing race)
             newly_hot_plan = _hot_transitions_plan(
-                spark, index_path, batch_id, batch_cnt, cap
+                spark, index_path, batch_id, batch_cnt, int(max_doc_freq)
             )
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        futs: dict = {}
-        try:
-            futs["admitted-text"] = ex.submit(
-                overwrite_partitions,
-                admitted.withColumn("__batch_id", F.lit(batch_id)),
-                out_path,
-                ["__batch_id"],
-            )
-            futs["postings"] = ex.submit(
-                overwrite_partitions,
-                adm_posts.withColumn("__batch_id", F.lit(batch_id)),
-                f"{index_path}/{_IDX_POSTINGS}",
-                ["__batch_id"],
-            )
-            if batch_cnt is not None:
-                futs["dfcnt-delta"] = ex.submit(
-                    overwrite_partitions,
-                    batch_cnt.withColumn("__batch_id", F.lit(batch_id)),
-                    f"{index_path}/{_IDX_DFCNT}",
-                    ["__batch_id"],
+    bands_path = f"{index_path}/{_IDX_BANDS}"
+    with _overlapped_writes(batch_id) as (submit, wait):
+        submit("admitted-text", admitted, out_path)
+        submit("postings", adm_posts, f"{index_path}/{_IDX_POSTINGS}")
+        if batch_cnt is not None:
+            submit("dfcnt-delta", batch_cnt, f"{index_path}/{_IDX_DFCNT}")
+        # optimistic fresh-band write: correct as-is unless a cap
+        # crossing invalidates some docs' bands — the rare branch below
+        # then overwrites the same partition with the replaced rows (a
+        # crash in between raises, so the batch replays and rewrites the
+        # partition either way)
+        submit("bands", band_rows, bands_path)
+        if newly_hot_plan is not None:
+            # feeds the hot write + two probes
+            newly_hot = newly_hot_plan.localCheckpoint(eager=False)
+            submit("hot", newly_hot, f"{index_path}/{_IDX_HOT}")
+            wait("hot")
+            if newly_hot.head(1):  # bounded existence probe
+                # rare crossing: the re-bands must see this batch's own
+                # postings and the hot partition just written
+                wait("postings", "bands")
+                stale = _hot_transition_rebands(
+                    spark, index_path, newly_hot, num_hashes, band_size
                 )
-            # optimistic fresh-band write: correct as-is unless a cap
-            # crossing invalidates some docs' bands — the rare branch
-            # below then overwrites the same partition with the
-            # replaced rows (a crash in between raises, so the batch
-            # replays and rewrites the partition either way)
-            futs["bands"] = ex.submit(
-                overwrite_partitions,
-                band_rows.withColumn("__batch_id", F.lit(batch_id)),
-                f"{index_path}/{_IDX_BANDS}",
-                ["__batch_id"],
-            )
-            if newly_hot_plan is not None:
-                # feeds the hot write + two probes; the checkpoint's
-                # stages execute concurrently with the pool's writes
-                newly_hot = newly_hot_plan.localCheckpoint(eager=False)
-                overwrite_partitions(
-                    newly_hot.withColumn("__batch_id", F.lit(batch_id)),
-                    f"{index_path}/{_IDX_HOT}",
-                    ["__batch_id"],
-                )
-                if newly_hot.head(1):  # bounded existence probe
-                    # rare crossing: the re-bands must see this batch's
-                    # own postings and the hot partition just written
-                    futs.pop("postings").result()
-                    futs.pop("bands").result()
-                    stale = _hot_transition_rebands(
-                        spark, index_path, newly_hot, num_hashes, band_size
-                    )
-                    # the re-bands REPLACE this partition's fresh rows
-                    # for any of the batch's own docs the crossing
-                    # invalidated — both versions would land in the same
-                    # partition, where latest-wins cannot break the tie
-                    replaced = band_rows.join(
-                        F.broadcast(stale.select("doc").distinct()),
-                        "doc",
-                        "left_anti",
-                    ).unionByName(stale)
-                    overwrite_partitions(
-                        replaced.withColumn("__batch_id", F.lit(batch_id)),
-                        f"{index_path}/{_IDX_BANDS}",
-                        ["__batch_id"],
-                    )
-        except BaseException as err:
-            _note_write_failures(err, futs)
-            raise
-        _join_overlapped_writes(futs)
-
-
-_GUARD_FILE = "_partition_guard.json"
+                # the re-bands REPLACE this partition's fresh rows for
+                # any of the batch's own docs the crossing invalidated —
+                # both versions would land in the same partition, where
+                # latest-wins cannot break the tie
+                replaced = band_rows.join(
+                    F.broadcast(stale.select("doc").distinct()), "doc", "left_anti"
+                ).unionByName(stale)
+                submit("bands", replaced, bands_path)
 
 
 #: parquet schema memo for the per-batch index reads — METADATA only,
@@ -1337,85 +1272,29 @@ def _read_idx_parquet(spark: SparkSession, path: str) -> DataFrame:
 _BOOTSTRAP_SEEN: set[str] = set()
 
 
-def _has_base_partition(spark: SparkSession, path: str) -> bool:
+def _base_partition_exists(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` has rows in its base (``__batch_id = -1``)
-    partition — the bootstrap completion probe shared by the admission
-    sinks, memoized per process once True (never memoized False: an
-    incomplete bootstrap must keep re-probing until init completes)."""
+    partition — the admission sinks' bootstrap completion probe, read
+    afresh on every call."""
     from pyspark.errors import AnalysisException
 
-    if path in _BOOTSTRAP_SEEN:
-        return True
     try:
-        ok = bool(
+        return bool(
             _read_idx_parquet(spark, path)
             .filter(F.col("__batch_id").cast("long") == -1)
             .head(1)
         )
     except AnalysisException:
         return False
-    if ok:
+
+
+def _has_base_partition(spark: SparkSession, path: str) -> bool:
+    """:func:`_base_partition_exists`, memoized per process once True
+    (never memoized False: an incomplete bootstrap must keep
+    re-probing until init completes)."""
+    if path not in _BOOTSTRAP_SEEN and _base_partition_exists(spark, path):
         _BOOTSTRAP_SEEN.add(path)
-    return ok
-
-
-def _read_partition_guard(checkpoint: str, spark: SparkSession) -> dict[str, int]:
-    """partition-key → owning batch id, persisted next to the checkpoint
-    (same Hadoop-FS story as the watermark store for URI checkpoints)."""
-    import json
-    import os
-
-    if "://" not in checkpoint:
-        p = os.path.join(checkpoint, _GUARD_FILE)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return {k: int(v) for k, v in json.load(f).items()}
-    from pyspark_ingestion_spark.ingestion.watermark import _hadoop_fs
-
-    jvm, fs, jpath = _hadoop_fs(f"{checkpoint}/{_GUARD_FILE}", spark)
-    if not fs.exists(jpath):
-        return {}
-    stream = fs.open(jpath)
-    try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return {k: int(v) for k, v in json.loads(raw).items()}
-
-
-def _write_partition_guard(
-    checkpoint: str, owners: dict[str, int], spark: SparkSession
-) -> None:
-    import json
-    import os
-
-    payload = json.dumps(owners, sort_keys=True)
-    if "://" not in checkpoint:
-        os.makedirs(checkpoint, exist_ok=True)
-        tmp = os.path.join(checkpoint, _GUARD_FILE + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(payload)
-        os.replace(tmp, os.path.join(checkpoint, _GUARD_FILE))
-        return
-    from pyspark_ingestion_spark.ingestion.watermark import _hadoop_fs
-
-    # tmp-write → delete → rename, mirroring write_watermark: a direct
-    # fs.create on the final path truncates it first, so a crash
-    # mid-write would leave a half-written JSON that makes every later
-    # _read_partition_guard raise — permanently wedging the stream until
-    # the file is hand-deleted (ADVICE r5)
-    jvm, fs, jpath = _hadoop_fs(f"{checkpoint}/{_GUARD_FILE}", spark)
-    jtmp = jvm.org.apache.hadoop.fs.Path(f"{checkpoint}/{_GUARD_FILE}.tmp")
-    out = fs.create(jtmp, True)
-    try:
-        out.write(bytearray(payload.encode("utf-8")))
-    finally:
-        out.close()
-    if fs.exists(jpath):
-        fs.delete(jpath, False)
-    if not fs.rename(jtmp, jpath):
-        raise IOError(f"rename {jtmp} -> {jpath} failed")
+    return path in _BOOTSTRAP_SEEN
 
 
 def stream_token_cms(
@@ -1452,31 +1331,20 @@ def stream_token_cms(
     skip-mode for the replaying batch's own uncommitted partition.
     """
     from pyspark_ingestion_spark.operators.profiling import token_cms_cells
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be a positive interval")
+    # every compaction is a major: the major interval equals the minor one
+    schedule = _compaction_schedule(cms_path, compact_every, compact_every)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+        if schedule(batch_id):
             compact_token_cms(
                 batch_df.sparkSession, cms_path, checkpoint=checkpoint,
                 on_uncommitted="skip",
             )
         delta = token_cms_cells(batch_df, text_col, depth, width)
-        overwrite_partitions(
-            delta.withColumn("__batch_id", F.lit(batch_id)),
-            cms_path,
-            ["__batch_id"],
-        )
+        _write_batch_partition(delta, cms_path, batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(stream_df, checkpoint, sink)
 
 
 def compact_token_cms(
@@ -1492,15 +1360,7 @@ def compact_token_cms(
     skip-mode as the admission-index compactions; always a major (the
     merged table is ≤ depth×width rows). Returns partitions removed."""
     return _compact_versioned_table(
-        spark,
-        cms_path,
-        lambda path, ids: (
-            spark.read.parquet(path)
-            .filter(F.col("__batch_id").cast("long").isin(ids))
-            .groupBy("i", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        ),
-        checkpoint,
+        spark, cms_path, _fold_sum(spark, ["i", "bucket"], "cnt"), checkpoint,
         on_uncommitted,
     )
 
@@ -1588,21 +1448,14 @@ def compact_admission_bands(
     """
 
     def merge(path: str, keep_ids: list[int]) -> DataFrame:
-        b = (
-            spark.read.parquet(path)
-            .withColumn("__batch_id", F.col("__batch_id").cast("long"))
-            .filter(F.col("__batch_id").isin(keep_ids))
+        b = _kept_rows(spark, path, keep_ids).withColumn(
+            "__batch_id", F.col("__batch_id").cast("long")
         )
         latest = b.groupBy("doc").agg(F.max("__batch_id").alias("__batch_id"))
         return b.join(latest, ["doc", "__batch_id"]).drop("__batch_id")
 
     return _compact_versioned_table(
-        spark,
-        f"{index_path}/{_IDX_BANDS}",
-        merge,
-        checkpoint,
-        on_uncommitted,
-        mode,
+        spark, f"{index_path}/{_IDX_BANDS}", merge, checkpoint, on_uncommitted, mode
     )
 
 
@@ -1641,41 +1494,44 @@ def compact_admission_index(
         )
     }
 
-    def keep(path: str, keep_ids: list[int]) -> DataFrame:
-        return (
-            spark.read.parquet(path)
-            .filter(F.col("__batch_id").cast("long").isin(keep_ids))
-        )
-
-    removed["postings"] = _compact_versioned_table(
-        spark,
-        f"{index_path}/{_IDX_POSTINGS}",
-        lambda path, ids: keep(path, ids).select("doc", "shingle"),
-        checkpoint,
-        on_uncommitted,
-        mode,
-    )
-    dfcnt_path = f"{index_path}/{_IDX_DFCNT}"
-    if _list_child_ids(spark, dfcnt_path, "__batch_id="):
-        removed["dfcnt"] = _compact_versioned_table(
-            spark,
-            dfcnt_path,
-            lambda path, ids: keep(path, ids)
-            .groupBy("shingle")
-            .agg(F.sum("cnt").alias("cnt")),
-            checkpoint,
-            on_uncommitted,
-            mode,
-        )
-        removed["hot"] = _compact_versioned_table(
-            spark,
-            f"{index_path}/{_IDX_HOT}",
-            lambda path, ids: keep(path, ids).select("shingle").distinct(),
-            checkpoint,
-            on_uncommitted,
-            mode,
+    folds = [(_IDX_POSTINGS, _fold_concat(spark, "doc", "shingle"))]
+    if _list_child_ids(spark, f"{index_path}/{_IDX_DFCNT}", "__batch_id="):
+        folds += [
+            (_IDX_DFCNT, _fold_sum(spark, "shingle", "cnt")),
+            (
+                _IDX_HOT,
+                lambda path, ids: _kept_rows(spark, path, ids)
+                .select("shingle")
+                .distinct(),
+            ),
+        ]
+    for table, fold in folds:
+        removed[table] = _compact_versioned_table(
+            spark, f"{index_path}/{table}", fold, checkpoint, on_uncommitted, mode
         )
     return removed
+
+
+def _kept_rows(spark: SparkSession, path: str, keep_ids: list[int]) -> DataFrame:
+    """The rows of ``path``'s partitions ``keep_ids`` — the input of a
+    :func:`_compact_versioned_table` merge."""
+    return spark.read.parquet(path).filter(
+        F.col("__batch_id").cast("long").isin(keep_ids)
+    )
+
+
+def _fold_concat(spark: SparkSession, *cols: str):
+    """Merge function for tables whose rows are disjoint across
+    partitions (append-only indexes): plain concatenation."""
+    return lambda path, ids: _kept_rows(spark, path, ids).select(*cols)
+
+
+def _fold_sum(spark: SparkSession, key, col: str):
+    """Merge function for counter-delta tables: per-``key`` SUM of
+    ``col`` — exact by counter associativity."""
+    return lambda path, ids: (
+        _kept_rows(spark, path, ids).groupBy(key).agg(F.sum(col).alias(col))
+    )
 
 
 def _compact_versioned_table(
@@ -1719,10 +1575,7 @@ def _compact_versioned_table(
       up-to-interval deltas — a major (or a re-minor over segments is
       NOT possible; majors collapse segments) bounds k.
     """
-    import json
-
     from pyspark_ingestion_spark.ingestion.watermark import _hadoop_fs
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     if on_uncommitted not in ("raise", "skip"):
         raise ValueError(f"unknown on_uncommitted {on_uncommitted!r}")
@@ -1739,14 +1592,9 @@ def _compact_versioned_table(
     # underscore prefix: Spark's file index skips _-prefixed files, so
     # the marker can live inside the staging dir without breaking the
     # parquet read-back
-    jvm, fs, man_path = _hadoop_fs(f"{staging}/_manifest.json", spark)
-    if fs.exists(man_path):  # resume a crashed run: staging is the plan
-        stream = fs.open(man_path)
-        try:
-            raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        plan = json.loads(raw)
+    manifest = f"{staging}/_manifest.json"
+    plan = read_state_json(manifest, spark)
+    if plan is not None:  # resume a crashed run: staging is the plan
         covered = plan["covered"]
         target = plan.get("target", -1)
     else:
@@ -1811,23 +1659,11 @@ def _compact_versioned_table(
                 "stream is quiescent (or from inside the sink, where "
                 "foreachBatch serializes against admission writes)."
             )
-        jtmp = jvm.org.apache.hadoop.fs.Path(f"{staging}/_manifest.json.tmp")
-        out = fs.create(jtmp, True)
-        try:
-            out.write(
-                bytearray(
-                    json.dumps({"covered": covered, "target": target}).encode("utf-8")
-                )
-            )
-        finally:
-            out.close()
-        if not fs.rename(jtmp, man_path):  # commit marker: staging is durable
-            raise IOError(f"rename {jtmp} -> {man_path} failed")
+        # commit marker: staging is durable
+        write_state_json(manifest, {"covered": covered, "target": target}, spark)
 
     merged = spark.read.parquet(staging).drop("__batch_id")
-    overwrite_partitions(
-        merged.withColumn("__batch_id", F.lit(target)), table_path, ["__batch_id"]
-    )
+    _write_batch_partition(merged, table_path, target)
     if target != -1:  # mark the folded partition as a segment
         _jvm5, mfs, mpath = _hadoop_fs(
             f"{table_path}/__batch_id={target}/_segment", spark
@@ -1943,17 +1779,12 @@ def init_substring_admission_index(
     and the dfcnt write leaves the probe false, and the repair path
     (:func:`backfill_substring_dfcnt`) recomputes the ledger from the
     windows partitions already on disk."""
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     spark = base_corpus.sparkSession
     rows = _windows_with_text(
         base_corpus.select(id_col, text_col), id_col, text_col, k, sample_mod
     )
-    overwrite_partitions(
-        rows.withColumn("__batch_id", F.lit(-1)),
-        f"{index_path}/{_IDX_WINDOWS}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(rows, f"{index_path}/{_IDX_WINDOWS}", -1)
     # seed the ledger from the STORED rows so the counts are exactly the
     # persisted table's (and the base text is not re-windowed)
     stored = (
@@ -1962,11 +1793,7 @@ def init_substring_admission_index(
         .select("doc", "wh")
     )
     cnt = stored.groupBy("wh").agg(F.count_distinct("doc").alias("cnt"))
-    overwrite_partitions(
-        cnt.withColumn("__batch_id", F.lit(-1)),
-        f"{index_path}/{_IDX_WDFCNT}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(cnt, f"{index_path}/{_IDX_WDFCNT}", -1)
 
 
 def backfill_substring_dfcnt(spark: SparkSession, index_path: str) -> int:
@@ -2034,7 +1861,6 @@ def _substring_rejects_indexed(
     min_len: int,
     max_window_df: int | None,
     sample_mod: int | None,
-    use_dfcnt_ledger: bool = True,
 ):
     """Index-driven exact-substring admission for one micro-batch.
     Returns ``(rejects, wb_raw)`` — the distinct batch ids to drop, and
@@ -2073,12 +1899,10 @@ def _substring_rejects_indexed(
     candidate join keys on ``wh``, so a hash absent from ``wb`` can
     produce no candidate regardless of ``wc`` — dropping it from the
     corpus side too (what the recompute form does) is join-key-redundant
-    and would cost a second corpus-sized anti-join.
-    ``use_dfcnt_ledger=False`` keeps the pre-r8 corpus-wide aggregate
-    reachable (the measured A/B arm in SCALING.md; also the automatic
-    fallback for a legacy index without the ledger). Replay
-    self-exclusion mirrors the LSH index: both reads drop the current
-    batch id's partition."""
+    and would cost a second corpus-sized anti-join. A legacy index
+    without the ledger falls back to the pre-r8 corpus-wide aggregate.
+    Replay self-exclusion mirrors the LSH index: both reads drop the
+    current batch id's partition."""
     from pyspark.errors import AnalysisException
 
     _validate_substring_params(k, min_len, sample_mod)
@@ -2106,15 +1930,11 @@ def _substring_rejects_indexed(
     ).localCheckpoint(eager=False)
     wb = wb_raw
     if max_window_df is not None:
-        hot = None
-        if use_dfcnt_ledger:
-            try:
-                hot = _substring_hot_windows(
-                    spark, index_path, batch_id, wb_raw, max_window_df
-                )
-            except AnalysisException:
-                hot = None  # legacy index without the ledger
-        if hot is None:
+        try:
+            hot = _substring_hot_windows(
+                spark, index_path, batch_id, wb_raw, max_window_df
+            )
+        except AnalysisException:  # legacy index without the ledger
             hot = (
                 wc.groupBy("wh")
                 .agg(F.count_distinct("doc").alias("__df"))
@@ -2173,45 +1993,25 @@ def _admit_substring_batch_indexed(
     min_len: int,
     max_window_df: int | None,
     sample_mod: int | None,
-    use_dfcnt_ledger: bool = True,
 ) -> None:
     """One micro-batch of indexed ``stream_substring_admission``: admit
     via :func:`_substring_rejects_indexed`, then append the admitted
     docs' text, window rows and window-df ledger delta — each to its own
-    ``__batch_id`` partition (replay overwrites exactly its own
-    partitions; the read excludes them — same contract as
-    ``_admit_dedup_batch_indexed``). Module-level for direct replay
-    testability; ``use_dfcnt_ledger`` is the SCALING.md A/B knob (the
-    delta is written either way, so the arms share index state)."""
-    from pyspark.errors import AnalysisException
-
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
-
+    ``__batch_id`` partition under the replay contract of
+    :func:`_run_admission_sink`. Module-level for direct replay
+    testability."""
     spark = batch_df.sparkSession
-
-    def _has_base(table: str) -> bool:
-        # NOT memoized (unlike the other sinks' bootstrap probes,
-        # r15 _has_base_partition): this probe doubles as the
-        # LEGACY-INDEX detector — a ledger deleted out-of-band must be
-        # re-detected on the NEXT batch so the backfill arm runs
-        # (pinned by test_substring_dfcnt_ledger_plan_parity_and_
-        # backfill), so the per-batch read is contractual
-        try:
-            return bool(
-                _read_idx_parquet(spark, f"{index_path}/{table}")
-                .filter(F.col("__batch_id").cast("long") == -1)
-                .head(1)
-            )
-        except AnalysisException:
-            return False
-
-    # bootstrap once; cheap existence probe afterwards. The probe targets
-    # the LEDGER (written last by init) so a crash inside the bootstrap
-    # window re-runs it; a windows base WITHOUT a ledger base is a
-    # pre-ledger index (or that same crash) and gets the O(index)
-    # one-time backfill instead of a full re-bootstrap.
-    if not _has_base(_IDX_WDFCNT):
-        if _has_base(_IDX_WINDOWS):
+    # bootstrap probe, read EVERY batch (unlike the other sinks' memoized
+    # _has_base_partition): it doubles as the LEGACY-INDEX detector — a
+    # ledger deleted out-of-band must be re-detected on the NEXT batch so
+    # the backfill arm runs (pinned by test_substring_dfcnt_ledger_plan_
+    # parity_and_backfill). The probe targets the LEDGER (written last by
+    # init) so a crash inside the bootstrap window re-runs it; a windows
+    # base WITHOUT a ledger base is a pre-ledger index (or that same
+    # crash) and gets the O(index) one-time backfill instead of a full
+    # re-bootstrap.
+    if not _base_partition_exists(spark, f"{index_path}/{_IDX_WDFCNT}"):
+        if _base_partition_exists(spark, f"{index_path}/{_IDX_WINDOWS}"):
             backfill_substring_dfcnt(spark, index_path)
         else:
             init_substring_admission_index(
@@ -2225,7 +2025,7 @@ def _admit_substring_batch_indexed(
     batch = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
     rejects, wb = _substring_rejects_indexed(
         spark, batch, index_path, batch_id, id_col, text_col, k, min_len,
-        max_window_df, sample_mod, use_dfcnt_ledger=use_dfcnt_ledger,
+        max_window_df, sample_mod,
     )
     # batch-sized; the out/windows/dfcnt writes all derive from it — cut
     # lineage once (EAGER: a lazy first-use is not a single-
@@ -2234,15 +2034,6 @@ def _admit_substring_batch_indexed(
     admitted = batch.join(F.broadcast(rejects), id_col, "left_anti").localCheckpoint(
         eager=True
     )
-    # r15 (guide §2.6): the admitted-TEXT, windows and window-df-delta
-    # writes are mutually independent — all three derive from the
-    # eagerly-checkpointed `admitted`/`adm_windows` frames and land in
-    # disjoint tables — so they run as concurrent Spark jobs instead of
-    # paying their per-job overheads as a sum (the r11 overlap pattern,
-    # widened from one background write to all three). Joined before
-    # returning, every failure surfaced (r12 ADVICE semantics).
-    from concurrent.futures import ThreadPoolExecutor
-
     adm_windows = wb.join(
         F.broadcast(admitted.select(F.col(id_col).alias("doc"))), "doc"
     ).localCheckpoint(eager=True)  # feeds the windows write AND the ledger delta
@@ -2251,30 +2042,12 @@ def _admit_substring_batch_indexed(
     # over partitions is the exact corpus df). Deterministic from the
     # batch → a replay overwrites it in lockstep with the windows rows.
     delta = adm_windows.groupBy("wh").agg(F.count_distinct("doc").alias("cnt"))
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futs: dict = {}
-        try:
-            futs["admitted-text"] = ex.submit(
-                overwrite_partitions,
-                admitted.withColumn("__batch_id", F.lit(batch_id)),
-                out_path,
-                ["__batch_id"],
-            )
-            futs["windows"] = ex.submit(
-                overwrite_partitions,
-                adm_windows.withColumn("__batch_id", F.lit(batch_id)),
-                f"{index_path}/{_IDX_WINDOWS}",
-                ["__batch_id"],
-            )
-            overwrite_partitions(
-                delta.withColumn("__batch_id", F.lit(batch_id)),
-                f"{index_path}/{_IDX_WDFCNT}",
-                ["__batch_id"],
-            )
-        except BaseException as err:
-            _note_write_failures(err, futs)
-            raise
-        _join_overlapped_writes(futs)
+    # r15 (guide §2.6): the three writes are mutually independent — they
+    # derive from eagerly-checkpointed frames and land in disjoint tables
+    with _overlapped_writes(batch_id) as (submit, _wait):
+        submit("admitted-text", admitted, out_path)
+        submit("windows", adm_windows, f"{index_path}/{_IDX_WINDOWS}")
+        submit("dfcnt", delta, f"{index_path}/{_IDX_WDFCNT}")
 
 
 def stream_substring_admission(
@@ -2301,106 +2074,50 @@ def stream_substring_admission(
     so far), and appends the survivors. Semantics per micro-batch match
     a sequential loop of ``operators.dedup.incremental_substring_rejects``
     over the same batches (equivalence pinned in tests/test_streaming.py,
-    including restart + replay).
+    including restart + replay). Batch loop, replay contract and
+    compaction schedule: :func:`_run_admission_sink`.
 
     With ``index_path`` (the PRODUCTION form) the corpus window table is
     maintained incrementally next to the corpus and carries the window
     strings, so no micro-batch ever re-windows — or even reads — the
     corpus text (plan-proved in tests); without it the recompute form
     re-derives the corpus window table from (base ∪ admitted) each
-    batch. Exactly-once via the same ``__batch_id`` dynamic-overwrite
-    contract as the LSH sink. 100 TB shape: set ``sample_mod`` —
-    content-defined window sampling divides index size and join fan-in
-    while keeping detection alignment-independent.
+    batch. 100 TB shape: set ``sample_mod`` — content-defined window
+    sampling divides index size and join fan-in while keeping detection
+    alignment-independent.
 
     With ``max_window_df`` the per-batch hot-window lookup resolves from
     the incrementally-maintained ``dfcnt`` ledger restricted to the
     batch's own window hashes (r8) — never a corpus-wide aggregate over
     the windows table (the r7 weak flag; SCALING.md r8 carries the A/B).
 
-    ``compact_every`` / ``compact_major_every`` (indexed form only):
-    same in-sink LSM policy as :func:`stream_dedup_admission` — a MINOR
-    fold of the windows index's delta partitions into a segment every N
-    batches (plain concatenation; the index is append-only so every
-    merge level is order-free) with the dfcnt deltas folding by exact
-    counter SUM under the same guard, a MAJOR into the base every M
-    (default 8N). Without it the per-batch index scan reads O(batches)
-    small files — the growth term the LSH A/B measured (SCALING.md r7)."""
-    from pyspark.errors import AnalysisException
-
+    ``compact_every`` / ``compact_major_every`` fold the index with
+    :func:`compact_substring_index` (plain concatenation for the
+    windows, exact counter SUM for the dfcnt deltas). Without it the
+    per-batch index scan reads O(batches) small files — the growth term
+    the LSH A/B measured (SCALING.md r7)."""
     from pyspark_ingestion_spark.operators.dedup import incremental_substring_rejects
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     eff_min_len = k if min_len is None else min_len
     _validate_substring_params(k, eff_min_len, sample_mod)
-    if compact_every is not None and (index_path is None or compact_every < 1):
-        raise ValueError("compact_every requires index_path and a positive interval")
-    if compact_major_every is not None and (
-        compact_every is None
-        or compact_major_every < compact_every
-        or compact_major_every % compact_every != 0
-    ):
-        raise ValueError(
-            "compact_major_every requires compact_every and must be a "
-            "positive multiple of it (majors run on compaction batches)"
-        )
-    major_every = (
-        compact_major_every
-        if compact_major_every is not None
-        else (compact_every * 8 if compact_every else None)
+    schedule = _compaction_schedule(index_path, compact_every, compact_major_every)
+    kw = dict(
+        id_col=id_col, text_col=text_col, k=k, min_len=eff_min_len,
+        max_window_df=max_window_df, sample_mod=sample_mod,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if index_path is not None:
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                compact_substring_index(
-                    batch_df.sparkSession,
-                    index_path,
-                    checkpoint=checkpoint,
-                    on_uncommitted="skip",
-                    mode=(
-                        "major"
-                        if major_every and batch_id % major_every == 0
-                        else "minor"
-                    ),
-                )
-            _admit_substring_batch_indexed(
-                batch_df, batch_id, base_corpus, out_path, index_path,
-                id_col=id_col, text_col=text_col, k=k, min_len=eff_min_len,
-                max_window_df=max_window_df, sample_mod=sample_mod,
-            )
-            return
-        spark = batch_df.sparkSession
-        # one source evaluation per batch (r14, guide §4)
-        batch = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        corpus = base_corpus.select(id_col, text_col)
-        try:
-            prev = (
-                spark.read.parquet(out_path)
-                .filter(F.col("__batch_id").cast("long") != batch_id)
-                .select(id_col, text_col)
-            )
-            corpus = corpus.unionByName(prev)
-        except AnalysisException:  # first batch: nothing admitted yet
-            pass
-        rejects = incremental_substring_rejects(
-            corpus, batch, id_col, text_col, k=k, min_len=eff_min_len,
-            max_window_df=max_window_df, sample_mod=sample_mod,
-        )
-        admitted = batch.join(F.broadcast(rejects), id_col, "left_anti")
-        overwrite_partitions(
-            admitted.withColumn("__batch_id", F.lit(batch_id)),
-            out_path,
-            ["__batch_id"],
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_admission_sink(
+        stream_df, checkpoint, index_path, schedule, compact_substring_index,
+        lambda b, i: _admit_substring_batch_indexed(
+            b, i, base_corpus, out_path, index_path, **kw
+        ),
+        lambda b, i: _admit_recompute(
+            b.select(id_col, text_col), i, base_corpus, out_path,
+            (id_col, text_col),
+            lambda corpus, batch: incremental_substring_rejects(
+                corpus, batch, **kw
+            ),
+        ),
     )
-    q.awaitTermination()
 
 
 def compact_substring_index(
@@ -2420,35 +2137,15 @@ def compact_substring_index(
     files). Same write-ahead staging, commit guard (with the retention
     floor) and LSM minor/major tiers as :func:`compact_admission_index`;
     returns table → partitions removed."""
-    removed = {
-        "windows": _compact_versioned_table(
-            spark,
-            f"{index_path}/{_IDX_WINDOWS}",
-            lambda path, ids: (
-                spark.read.parquet(path)
-                .filter(F.col("__batch_id").cast("long").isin(ids))
-                .select("doc", "pos", "wh", "w")
-            ),
-            checkpoint,
-            on_uncommitted,
-            mode,
-        )
-    }
+    folds = [(_IDX_WINDOWS, _fold_concat(spark, "doc", "pos", "wh", "w"))]
     if _list_child_ids(spark, f"{index_path}/{_IDX_WDFCNT}", "__batch_id="):
-        removed["dfcnt"] = _compact_versioned_table(
-            spark,
-            f"{index_path}/{_IDX_WDFCNT}",
-            lambda path, ids: (
-                spark.read.parquet(path)
-                .filter(F.col("__batch_id").cast("long").isin(ids))
-                .groupBy("wh")
-                .agg(F.sum("cnt").alias("cnt"))
-            ),
-            checkpoint,
-            on_uncommitted,
-            mode,
+        folds.append((_IDX_WDFCNT, _fold_sum(spark, "wh", "cnt")))
+    return {
+        table: _compact_versioned_table(
+            spark, f"{index_path}/{table}", fold, checkpoint, on_uncommitted, mode
         )
-    return removed
+        for table, fold in folds
+    }
 
 
 # ------------------------------------ semantic (embedding) streaming admission
@@ -2539,7 +2236,6 @@ def init_semantic_admission_index(
     it the bucket is the ``n_dims``-bit sign pattern. Whichever is
     baked here is what every subsequent batch uses."""
     from pyspark_ingestion_spark.operators.similarity import centroid_rows_of
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     rows_c = None
     if centroids is not None:
@@ -2551,11 +2247,7 @@ def init_semantic_admission_index(
             spark, rows_c, "centroid_id int, cvec array<double>"
         ).write.mode("overwrite").parquet(f"{index_path}/{_IDX_CENTROIDS}")
     rows = _bucket_rows(base_corpus, id_col, vec_col, n_dims, rows_c)
-    overwrite_partitions(
-        rows.withColumn("__batch_id", F.lit(-1)),
-        f"{index_path}/{_IDX_BUCKETS}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(rows, f"{index_path}/{_IDX_BUCKETS}", -1)
 
 
 def _semantic_rejects_indexed(
@@ -2703,15 +2395,12 @@ def _admit_semantic_batch_indexed(
     """One micro-batch of indexed ``stream_semantic_admission``: admit
     via :func:`_semantic_rejects_indexed`, then append the admitted
     vectors and their bucket rows — each to its own ``__batch_id``
-    partition under the shared replay-overwrite contract. Module-level
-    for direct replay testability. ``centroids`` only matters on the
-    bootstrap batch (it is persisted into the index's signature there);
-    afterwards the PERSISTED quantizer governs every bucket, so a
-    restart that passes different centroids cannot corrupt the index."""
-    from pyspark.errors import AnalysisException
-
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
-
+    partition under the replay contract of :func:`_run_admission_sink`.
+    Module-level for direct replay testability. ``centroids`` only
+    matters on the bootstrap batch (it is persisted into the index's
+    signature there); afterwards the PERSISTED quantizer governs every
+    bucket, so a restart that passes different centroids cannot corrupt
+    the index."""
     spark = batch_df.sparkSession
     # bootstrap once; the completion probe memoizes per process once
     # True (r15, _has_base_partition)
@@ -2737,20 +2426,12 @@ def _admit_semantic_batch_indexed(
     )
     # r15 (guide §2.6): the admitted-vector and bucket-index writes are
     # independent — overlap them like the other admission sinks
-    with _overlapped_write(
-        overwrite_partitions,
-        admitted.withColumn("__batch_id", F.lit(batch_id)),
-        out_path,
-        ["__batch_id"],
-    ):
-        adm_buckets = bb.join(
-            F.broadcast(admitted.select(F.col(id_col).alias("doc"))), "doc"
-        )
-        overwrite_partitions(
-            adm_buckets.withColumn("__batch_id", F.lit(batch_id)),
-            f"{index_path}/{_IDX_BUCKETS}",
-            ["__batch_id"],
-        )
+    adm_buckets = bb.join(
+        F.broadcast(admitted.select(F.col(id_col).alias("doc"))), "doc"
+    )
+    with _overlapped_writes(batch_id) as (submit, _wait):
+        submit("admitted-vectors", admitted, out_path)
+        submit("buckets", adm_buckets, f"{index_path}/{_IDX_BUCKETS}")
 
 
 def stream_semantic_admission(
@@ -2780,17 +2461,17 @@ def stream_semantic_admission(
     appends the survivors. Semantics per micro-batch match a sequential
     loop of ``operators.similarity.embedding_batch_rejects`` over the
     same batches (equivalence pinned in tests/test_streaming.py,
-    including restart + replay).
+    including restart + replay). Batch loop, replay contract and
+    compaction schedule: :func:`_run_admission_sink`.
 
     With ``index_path`` (the PRODUCTION form) the corpus's bucketed
     embedding table is maintained incrementally — vectors, norms and
     buckets stored at admission — so no micro-batch ever re-buckets or
     even reads a corpus embedding source (plan-proved in tests); without
     it the recompute form re-buckets (base ∪ admitted) each batch.
-    Exactly-once via the same ``__batch_id`` dynamic-overwrite contract
-    as the other sinks. ``compact_every`` / ``compact_major_every``:
-    same in-sink LSM policy (:func:`compact_semantic_index` — plain
-    concatenation, the index has no staleness or versioning).
+    ``compact_every`` / ``compact_major_every`` fold the index with
+    :func:`compact_semantic_index` (plain concatenation, the index has
+    no staleness or versioning).
 
     ``centroids`` (r9, the 100 TB bucket width): a trained coarse
     quantizer (``operators.similarity.kmeans_centroids``) whose IVF
@@ -2811,13 +2492,10 @@ def stream_semantic_admission(
     the whole bucket's recall. Identical semantics in both the indexed
     and recompute forms (shared ``dedup._probe_salted_buckets``
     arithmetic)."""
-    from pyspark.errors import AnalysisException
-
     from pyspark_ingestion_spark.operators.similarity import (
         centroid_rows_of,
         embedding_batch_rejects,
     )
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
@@ -2830,84 +2508,29 @@ def stream_semantic_admission(
             "nprobe > 1 requires trained centroids (sign buckets have no "
             "probe order)"
         )
-    if compact_every is not None and (index_path is None or compact_every < 1):
-        raise ValueError("compact_every requires index_path and a positive interval")
-    if compact_major_every is not None and (
-        compact_every is None
-        or compact_major_every < compact_every
-        or compact_major_every % compact_every != 0
-    ):
-        raise ValueError(
-            "compact_major_every requires compact_every and must be a "
-            "positive multiple of it (majors run on compaction batches)"
-        )
-    major_every = (
-        compact_major_every
-        if compact_major_every is not None
-        else (compact_every * 8 if compact_every else None)
-    )
-
+    schedule = _compaction_schedule(index_path, compact_every, compact_major_every)
     # the recompute form applies the quantizer per batch — normalize it
     # ONCE here (K bounded rows), not inside every micro-batch
     rows_c = centroid_rows_of(centroids) if centroids is not None else None
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if index_path is not None:
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                compact_semantic_index(
-                    batch_df.sparkSession,
-                    index_path,
-                    checkpoint=checkpoint,
-                    on_uncommitted="skip",
-                    mode=(
-                        "major"
-                        if major_every and batch_id % major_every == 0
-                        else "minor"
-                    ),
-                )
-            _admit_semantic_batch_indexed(
-                batch_df, batch_id, base_corpus, out_path, index_path,
-                id_col=id_col, vec_col=vec_col, threshold=threshold,
-                n_dims=n_dims, centroids=centroids, nprobe=nprobe,
-                max_bucket_size=max_bucket_size,
-                bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
-            )
-            return
-        spark = batch_df.sparkSession
-        # one source evaluation per batch (r14, guide §4)
-        batch = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        corpus = base_corpus.select(id_col, vec_col)
-        try:
-            prev = (
-                spark.read.parquet(out_path)
-                .filter(F.col("__batch_id").cast("long") != batch_id)
-                .select(id_col, vec_col)
-            )
-            corpus = corpus.unionByName(prev.withColumn(
-                vec_col, F.col(vec_col).cast(dict(corpus.dtypes)[vec_col])
-            ))
-        except AnalysisException:  # first batch: nothing admitted yet
-            pass
-        rejects = embedding_batch_rejects(
-            corpus, batch, id_col, vec_col, threshold=threshold,
-            n_dims=n_dims, centroids=rows_c, nprobe=nprobe,
-            max_bucket_size=max_bucket_size,
-            bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
-        ).select(id_col)
-        admitted = batch.join(F.broadcast(rejects), id_col, "left_anti")
-        overwrite_partitions(
-            admitted.withColumn("__batch_id", F.lit(batch_id)),
-            out_path,
-            ["__batch_id"],
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    kw = dict(
+        threshold=threshold, n_dims=n_dims, nprobe=nprobe,
+        max_bucket_size=max_bucket_size, bucket_cap_mode=bucket_cap_mode,
+        probe_salts=probe_salts,
     )
-    q.awaitTermination()
+    _run_admission_sink(
+        stream_df, checkpoint, index_path, schedule, compact_semantic_index,
+        lambda b, i: _admit_semantic_batch_indexed(
+            b, i, base_corpus, out_path, index_path, id_col=id_col,
+            vec_col=vec_col, centroids=centroids, **kw,
+        ),
+        lambda b, i: _admit_recompute(
+            b.select(id_col, vec_col), i, base_corpus, out_path,
+            (id_col, vec_col),
+            lambda corpus, batch: embedding_batch_rejects(
+                corpus, batch, id_col, vec_col, centroids=rows_c, **kw
+            ).select(id_col),
+        ),
+    )
 
 
 def compact_semantic_index(
@@ -2924,16 +2547,9 @@ def compact_semantic_index(
     retention floor) and LSM minor/major tiers as
     :func:`compact_admission_index`; returns partitions removed."""
     return _compact_versioned_table(
-        spark,
-        f"{index_path}/{_IDX_BUCKETS}",
-        lambda path, ids: (
-            spark.read.parquet(path)
-            .filter(F.col("__batch_id").cast("long").isin(ids))
-            .select("doc", "bucket", "vec", "norm")
-        ),
-        checkpoint,
-        on_uncommitted,
-        mode,
+        spark, f"{index_path}/{_IDX_BUCKETS}",
+        _fold_concat(spark, "doc", "bucket", "vec", "norm"), checkpoint,
+        on_uncommitted, mode,
     )
 
 
@@ -2982,13 +2598,7 @@ def init_fingerprint_admission_index(
     """One-time bootstrap: persist the base corpus's normalized
     fingerprint rows (doc, hi, lo) into ``__batch_id=-1`` — the only
     time the indexed path ever decodes base payloads. Idempotent."""
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
-
-    overwrite_partitions(
-        base_fp.withColumn("__batch_id", F.lit(-1)),
-        f"{index_path}/{_IDX_FPRINTS}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(base_fp, f"{index_path}/{_IDX_FPRINTS}", -1)
 
 
 def _fingerprint_rejects_indexed(
@@ -3050,12 +2660,8 @@ def _admit_fingerprint_batch_indexed(
     decode + hash the batch ONCE (localCheckpoint — every join against
     it broadcasts, per the stats-free-frame rule), reject via
     :func:`_fingerprint_rejects_indexed`, append admitted media rows and
-    their fingerprint rows under the shared ``__batch_id``
-    replay-overwrite contract. Module-level for replay testability."""
-    from pyspark.errors import AnalysisException
-
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
-
+    their fingerprint rows under the replay contract of
+    :func:`_run_admission_sink`. Module-level for replay testability."""
     spark = batch_df.sparkSession
     # bootstrap once; the completion probe memoizes per process once
     # True (r15, _has_base_partition)
@@ -3082,80 +2688,14 @@ def _admit_fingerprint_batch_indexed(
         eager=True
     )
     # the admitted-MEDIA write is independent of the fprints index
-    # write, so it overlaps as a concurrent Spark job (r11, same
-    # pattern + A/B as the hotlog sink); joined before returning, with
-    # both-failure surfacing (r12, ADVICE)
-    with _overlapped_write(
-        overwrite_partitions,
-        admitted.withColumn("__batch_id", F.lit(batch_id)),
-        out_path,
-        ["__batch_id"],
-    ):
-        adm_fp = batch_fp.join(
-            F.broadcast(admitted.select(F.col(id_col).alias("doc"))), "doc"
-        )
-        overwrite_partitions(
-            adm_fp.withColumn("__batch_id", F.lit(batch_id)),
-            f"{index_path}/{_IDX_FPRINTS}",
-            ["__batch_id"],
-        )
-
-
-def _admit_fingerprint_batch_recompute(
-    batch_df: DataFrame,
-    batch_id: int,
-    base_media: DataFrame,
-    out_path: str,
-    hash_fn,
-    hash_cols: tuple[str, str],
-    id_col: str,
-    radius: int,
-    max_bucket_size: int | None = None,
-    bucket_cap_mode: str = "drop",
-    probe_salts: int = 4,
-) -> None:
-    """One micro-batch of the RECOMPUTE form of
-    ``stream_fingerprint_admission`` (no index): re-decode and re-hash
-    (base ∪ admitted-so-far) payloads, reject the batch against them,
-    append survivors. Module-level so the sink, the A/B harness
-    (tools/fingerprint_ab.py) and tests all measure/exercise the SAME
-    code — an inline copy in the harness could silently diverge from
-    the sink it claims to benchmark."""
-    from pyspark.errors import AnalysisException
-
-    from pyspark_ingestion_spark.operators.multimodal import (
-        fingerprint_batch_rejects,
+    # write, so they overlap as concurrent Spark jobs (r11, same pattern
+    # + A/B as the hotlog sink)
+    adm_fp = batch_fp.join(
+        F.broadcast(admitted.select(F.col(id_col).alias("doc"))), "doc"
     )
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
-
-    spark = batch_df.sparkSession
-    # one source evaluation per batch (r14, guide §4): the payload
-    # batch feeds both the decode+hash and the admitted anti-join
-    batch_df = batch_df.localCheckpoint(eager=True)
-    corpus = base_media.select(id_col, "payload")
-    try:
-        prev = (
-            spark.read.parquet(out_path)
-            .filter(F.col("__batch_id").cast("long") != batch_id)
-            .select(id_col, "payload")
-        )
-        corpus = corpus.unionByName(prev)
-    except AnalysisException:  # first batch: nothing admitted yet
-        pass
-    rejects = fingerprint_batch_rejects(
-        _hash_rows(hash_fn, corpus, hash_cols, id_col),
-        _hash_rows(hash_fn, batch_df, hash_cols, id_col),
-        radius=radius,
-        max_bucket_size=max_bucket_size,
-        bucket_cap_mode=bucket_cap_mode,
-        probe_salts=probe_salts,
-    ).withColumnRenamed("doc", id_col)
-    admitted = batch_df.join(F.broadcast(rejects), id_col, "left_anti")
-    overwrite_partitions(
-        admitted.withColumn("__batch_id", F.lit(batch_id)),
-        out_path,
-        ["__batch_id"],
-    )
+    with _overlapped_writes(batch_id) as (submit, _wait):
+        submit("media", admitted, out_path)
+        submit("fprints", adm_fp, f"{index_path}/{_IDX_FPRINTS}")
 
 
 def stream_fingerprint_admission(
@@ -3182,17 +2722,17 @@ def stream_fingerprint_admission(
     ONE sink serves every 64-bit fingerprint family member), rejects
     items within ``radius`` Hamming bits of the growing corpus (base +
     everything admitted so far — exact, banding is pigeonhole-complete
-    at radius ≤ 7), and appends the surviving media rows.
+    at radius ≤ 7), and appends the surviving media rows. Batch loop,
+    replay contract and compaction schedule: :func:`_run_admission_sink`.
 
     With ``index_path`` (the PRODUCTION form) the corpus's fingerprint
     table is maintained incrementally — 16 bytes per admitted item —
     so no micro-batch ever re-decodes or even reads a corpus payload
     (plan-proved in tests); without it, the recompute form re-hashes
-    (base ∪ admitted) each batch. Exactly-once via the same
-    ``__batch_id`` dynamic-overwrite contract as the other sinks;
-    ``compact_every`` / ``compact_major_every``: same in-sink LSM
-    policy (:func:`compact_fingerprint_index` — plain concatenation,
-    stored rows are pure payload functions, no staleness).
+    (base ∪ admitted) each batch. ``compact_every`` /
+    ``compact_major_every`` fold the index with
+    :func:`compact_fingerprint_index` (plain concatenation, stored rows
+    are pure payload functions, no staleness).
     ``max_bucket_size`` (optional) caps corpus band buckets against
     degenerate-media skew — flat images / silent audio collapsing to
     one band value; exactness trade documented on
@@ -3206,7 +2746,10 @@ def stream_fingerprint_admission(
     per-batch cost shape is unchanged: both modes pay the same one
     corpus-band aggregate per batch (the oversized-bucket list), and
     the probe replicates only batch rows (O(batch·probe_salts))."""
-    from pyspark_ingestion_spark.operators.multimodal import image_dhash
+    from pyspark_ingestion_spark.operators.multimodal import (
+        fingerprint_batch_rejects,
+        image_dhash,
+    )
 
     if hash_fn is None:
         hash_fn = image_dhash
@@ -3218,58 +2761,28 @@ def stream_fingerprint_admission(
         raise ValueError(
             f"radius must be in [0, 7] (8-band pigeonhole bound), got {radius}"
         )
-    if compact_every is not None and (index_path is None or compact_every < 1):
-        raise ValueError("compact_every requires index_path and a positive interval")
-    if compact_major_every is not None and (
-        compact_every is None
-        or compact_major_every < compact_every
-        or compact_major_every % compact_every != 0
-    ):
-        raise ValueError(
-            "compact_major_every requires compact_every and must be a "
-            "positive multiple of it (majors run on compaction batches)"
-        )
-    major_every = (
-        compact_major_every
-        if compact_major_every is not None
-        else (compact_every * 8 if compact_every else None)
+    schedule = _compaction_schedule(index_path, compact_every, compact_major_every)
+    kw = dict(
+        radius=radius, max_bucket_size=max_bucket_size,
+        bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if index_path is not None:
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                compact_fingerprint_index(
-                    batch_df.sparkSession,
-                    index_path,
-                    checkpoint=checkpoint,
-                    on_uncommitted="skip",
-                    mode=(
-                        "major"
-                        if major_every and batch_id % major_every == 0
-                        else "minor"
-                    ),
-                )
-            _admit_fingerprint_batch_indexed(
-                batch_df, batch_id, base_media, out_path, index_path,
-                hash_fn=hash_fn, hash_cols=hash_cols, id_col=id_col,
-                radius=radius, max_bucket_size=max_bucket_size,
-                bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
-            )
-            return
-        _admit_fingerprint_batch_recompute(
-            batch_df, batch_id, base_media, out_path,
-            hash_fn=hash_fn, hash_cols=hash_cols, id_col=id_col,
-            radius=radius, max_bucket_size=max_bucket_size,
-            bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_admission_sink(
+        stream_df, checkpoint, index_path, schedule, compact_fingerprint_index,
+        lambda b, i: _admit_fingerprint_batch_indexed(
+            b, i, base_media, out_path, index_path, hash_fn=hash_fn,
+            hash_cols=hash_cols, id_col=id_col, **kw,
+        ),
+        # the recompute form re-decodes and re-hashes (base ∪ admitted)
+        # payloads per batch; the batch keeps all its columns
+        lambda b, i: _admit_recompute(
+            b, i, base_media, out_path, (id_col, "payload"),
+            lambda corpus, batch: fingerprint_batch_rejects(
+                _hash_rows(hash_fn, corpus, hash_cols, id_col),
+                _hash_rows(hash_fn, batch, hash_cols, id_col),
+                **kw,
+            ).withColumnRenamed("doc", id_col),
+        ),
     )
-    q.awaitTermination()
 
 
 def compact_fingerprint_index(
@@ -3284,16 +2797,8 @@ def compact_fingerprint_index(
     Same write-ahead staging, commit guard and LSM minor/major tiers as
     the other sinks; returns partitions removed."""
     return _compact_versioned_table(
-        spark,
-        f"{index_path}/{_IDX_FPRINTS}",
-        lambda path, ids: (
-            spark.read.parquet(path)
-            .filter(F.col("__batch_id").cast("long").isin(ids))
-            .select("doc", "hi", "lo")
-        ),
-        checkpoint,
-        on_uncommitted,
-        mode,
+        spark, f"{index_path}/{_IDX_FPRINTS}", _fold_concat(spark, "doc", "hi", "lo"),
+        checkpoint, on_uncommitted, mode,
     )
 
 
@@ -3367,56 +2872,24 @@ def _check_generation_binding(
     discipline — `rotate_pq_layout` is publish-then-switch, and the
     switch REQUIRES a fresh checkpoint because the new sink's batch
     numbering restarts from 0."""
-    import json as _json
-    import os
-
-    from pyspark_ingestion_spark.ingestion.watermark import _hadoop_fs, _is_uri
-
-    payload = None
-    if _is_uri(checkpoint):
-        jvm, fs, jdir = _hadoop_fs(checkpoint, spark)
-        jfile = jvm.org.apache.hadoop.fs.Path(jdir, _PQ_GENERATION_MARKER)
-        if fs.exists(jfile):
-            stream = fs.open(jfile)
-            try:
-                payload = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            finally:
-                stream.close()
-    else:
-        path = os.path.join(checkpoint, _PQ_GENERATION_MARKER)
-        if os.path.exists(path):
-            with open(path) as f:
-                payload = f.read()
-    if payload is not None:
-        bound = _json.loads(payload)
-        if bound.get("generation_id") != gen_id or bound.get("layout_path") != layout_path:
-            raise ValueError(
-                f"checkpoint {checkpoint!r} is bound to generation "
-                f"{bound.get('generation_id')} of layout "
-                f"{bound.get('layout_path')!r}, but the sink is pointed at "
-                f"generation {gen_id} of layout {layout_path!r} — an old "
-                "checkpoint must never drive a rotated/new generation (its "
-                "batch ids would overwrite the wrong partitions). Cut over "
-                "with a FRESH checkpoint directory (rotate_pq_layout is "
-                "publish-then-switch), or point this checkpoint back at its "
-                "original layout"
-            )
-        return
-    doc = _json.dumps({"layout_path": layout_path, "generation_id": gen_id})
-    if _is_uri(checkpoint):
-        jvm, fs, jdir = _hadoop_fs(checkpoint, spark)
-        jfile = jvm.org.apache.hadoop.fs.Path(jdir, _PQ_GENERATION_MARKER)
-        out = fs.create(jfile, True)
-        try:
-            out.write(doc.encode("utf-8"))
-        finally:
-            out.close()
-    else:
-        os.makedirs(checkpoint, exist_ok=True)
-        tmp = os.path.join(checkpoint, _PQ_GENERATION_MARKER + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(doc)
-        os.replace(tmp, os.path.join(checkpoint, _PQ_GENERATION_MARKER))
+    marker = f"{checkpoint}/{_PQ_GENERATION_MARKER}"
+    bound = read_state_json(marker, spark)
+    if bound is None:
+        write_state_json(
+            marker, {"layout_path": layout_path, "generation_id": gen_id}, spark
+        )
+    elif bound.get("generation_id") != gen_id or bound.get("layout_path") != layout_path:
+        raise ValueError(
+            f"checkpoint {checkpoint!r} is bound to generation "
+            f"{bound.get('generation_id')} of layout "
+            f"{bound.get('layout_path')!r}, but the sink is pointed at "
+            f"generation {gen_id} of layout {layout_path!r} — an old "
+            "checkpoint must never drive a rotated/new generation (its "
+            "batch ids would overwrite the wrong partitions). Cut over "
+            "with a FRESH checkpoint directory (rotate_pq_layout is "
+            "publish-then-switch), or point this checkpoint back at its "
+            "original layout"
+        )
 
 
 def _assign_pq_batch(
@@ -3450,7 +2923,6 @@ def _assign_pq_batch(
         codebook_rows_of,
         ivf_pq_assign,
     )
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     spark = batch_df.sparkSession
     gen = _load_pq_generation(spark, layout_path)
@@ -3502,11 +2974,7 @@ def _assign_pq_batch(
         # the layout write AND the residual-stats feed both derive from
         # it — cut lineage once so the PQ encode runs once, not twice
         assigned = assigned.localCheckpoint(eager=False)
-    overwrite_partitions(
-        assigned.withColumn("__batch_id", F.lit(batch_id)),
-        f"{layout_path}/{_PQ_LAYOUT_ASSIGNED}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(assigned, f"{layout_path}/{_PQ_LAYOUT_ASSIGNED}", batch_id)
     if stats_path is not None:
         from pyspark_ingestion_spark.operators.similarity import (
             ivf_cell_residual_stats,
@@ -3518,11 +2986,7 @@ def _assign_pq_batch(
         stats = ivf_cell_residual_stats(assigned, cents, vec_col=vec_col).select(
             "cell", "n_vectors", "sum_residual", "max_residual"
         )
-        overwrite_partitions(
-            stats.withColumn("__batch_id", F.lit(batch_id)),
-            stats_path,
-            ["__batch_id"],
-        )
+        _write_batch_partition(stats, stats_path, batch_id)
 
 
 def stream_ivf_pq_assign(
@@ -3575,18 +3039,14 @@ def stream_ivf_pq_assign(
     ``operators.similarity.ivf_drift_flags`` to get per-cell retrain
     triggers without ever rescanning the corpus. Same O(batch) and
     replay-overwrite contract as the layout write."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda batch_df, batch_id: _assign_pq_batch(
-                batch_df, batch_id, layout_path, centroids, codebooks,
-                id_col, vec_col, n_sub, stats_path, checkpoint,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: _assign_pq_batch(
+            batch_df, batch_id, layout_path, centroids, codebooks,
+            id_col, vec_col, n_sub, stats_path, checkpoint,
+        ),
     )
-    q.awaitTermination()
 
 
 def rotate_pq_layout(
@@ -3627,7 +3087,6 @@ def rotate_pq_layout(
         kmeans_centroids,
         pq_codebooks,
     )
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     cents = kmeans_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
@@ -3652,11 +3111,7 @@ def rotate_pq_layout(
     assigned = ivf_pq_assign(
         corpus, cents_p, cbs_p, id_col=id_col, vec_col=vec_col, n_sub=n_sub
     )
-    overwrite_partitions(
-        assigned.withColumn("__batch_id", F.lit(-1)),
-        f"{new_layout_path}/{_PQ_LAYOUT_ASSIGNED}",
-        ["__batch_id"],
-    )
+    _write_batch_partition(assigned, f"{new_layout_path}/{_PQ_LAYOUT_ASSIGNED}", -1)
 
 
 def _feature_hist_batch(
@@ -3671,7 +3126,6 @@ def _feature_hist_batch(
     ``__batch_id`` partition (replay idempotent). Module-level for
     direct replay testability."""
     from pyspark_ingestion_spark.operators.profiling import feature_histogram
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     # one source evaluation per batch (r14, guide §4): the isEmpty
     # probe and the histogram rollup share the single materialization
@@ -3679,9 +3133,7 @@ def _feature_hist_batch(
     if batch_df.isEmpty():
         return
     h = feature_histogram(batch_df, col, edges)
-    overwrite_partitions(
-        h.withColumn("__batch_id", F.lit(batch_id)), stats_path, ["__batch_id"]
-    )
+    _write_batch_partition(h, stats_path, batch_id)
 
 
 def stream_feature_histogram(
@@ -3708,17 +3160,13 @@ def stream_feature_histogram(
     replay contract. The edges are the CALLER's fixed binning: drift
     is only meaningful against the baseline's exact edges, so they are
     plan constants, never derived per batch."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda batch_df, batch_id: _feature_hist_batch(
-                batch_df, batch_id, col, edges, stats_path
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: _feature_hist_batch(
+            batch_df, batch_id, col, edges, stats_path
+        ),
     )
-    q.awaitTermination()
 
 
 def _decontaminate_batch(
@@ -3753,7 +3201,6 @@ def _decontaminate_batch(
     hot-drop with the batch face (``dedup.containment_pairs``) over
     the assembled corpus instead."""
     from pyspark_ingestion_spark.operators.dedup import containment_pairs
-    from pyspark_ingestion_spark.sources.writers import overwrite_partitions
 
     # one source evaluation per batch (r14, guide §4): the batch feeds
     # the isEmpty probe, the dirty-id build and the admitted anti-join
@@ -3780,11 +3227,7 @@ def _decontaminate_batch(
     admitted = batch.join(
         F.broadcast(dirty), batch[id_col] == dirty["corpus_id"], "left_anti"
     )
-    overwrite_partitions(
-        admitted.withColumn("__batch_id", F.lit(batch_id)),
-        out_path,
-        ["__batch_id"],
-    )
+    _write_batch_partition(admitted, out_path, batch_id)
 
 
 def stream_decontaminate_admission(
@@ -3859,16 +3302,12 @@ def stream_decontaminate_admission(
             bloom_bits,
             bloom_hashes,
         )
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda batch_df, batch_id: _decontaminate_batch(
-                batch_df, batch_id, eval_df, out_path, id_col, text_col,
-                n, threshold_num, threshold_den, max_doc_freq,
-                bloom_bits, bloom_hashes, state,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: _decontaminate_batch(
+            batch_df, batch_id, eval_df, out_path, id_col, text_col,
+            n, threshold_num, threshold_den, max_doc_freq,
+            bloom_bits, bloom_hashes, state,
+        ),
     )
-    q.awaitTermination()

@@ -174,6 +174,69 @@ def test_watermark_roundtrip_through_hadoop_fs(spark, tmp_path):
     assert read_watermark(f"{tmp_path}/lake/t", "sap", "t1", "updated_at", "x") == wm2
 
 
+def test_state_json_writes_are_atomic_on_hadoop_fs(monkeypatch):
+    """A crash mid-write must never leave a truncated state file that
+    makes every later read raise: on URI paths each driver-side JSON
+    state file (sync.json, the partition guard, the compaction manifest,
+    the PQ generation binding) is created as ``<path>.tmp`` and renamed
+    into place. A fake Hadoop FileSystem records every ``create``."""
+    import types
+
+    import pytest
+
+    from pyspark_ingestion_spark.ingestion import watermark
+    from pyspark_ingestion_spark.streaming.pipeline import _check_generation_binding
+
+    files, created = {}, []
+
+    class Out:
+        def __init__(self, path):
+            self.path, self.buf = path, b""
+
+        def write(self, data):
+            self.buf += bytes(data)
+
+        def close(self):
+            files[self.path] = self.buf
+
+    class FakeFS:
+        def exists(self, p):
+            return p in files
+
+        def create(self, p, overwrite):
+            created.append(p)
+            return Out(p)
+
+        def open(self, p):
+            return types.SimpleNamespace(data=files[p], close=lambda: None)
+
+        def delete(self, p, recursive):
+            return files.pop(p, None) is not None
+
+        def rename(self, src, dst):
+            files[dst] = files.pop(src)
+            return True
+
+    ns = types.SimpleNamespace
+    jvm = ns(org=ns(apache=ns(
+        hadoop=ns(fs=ns(Path=lambda p, child=None: p if child is None else f"{p}/{child}")),
+        commons=ns(io=ns(IOUtils=ns(toString=lambda st, enc: st.data.decode(enc)))),
+    )))
+    fs = FakeFS()
+    monkeypatch.setattr(watermark, "_hadoop_fs", lambda path, spark=None: (jvm, fs, path))
+
+    _check_generation_binding(None, "gs://b/ck", "gs://b/layout", "gen-a")
+    _check_generation_binding(None, "gs://b/ck", "gs://b/layout", "gen-a")
+    with pytest.raises(ValueError, match="bound to generation"):
+        _check_generation_binding(None, "gs://b/ck", "gs://b/layout", "gen-b")
+    wm = watermark.Watermark("s", "t", "c", "2026-01-01T00:00:00.000000Z")
+    watermark.write_watermark(wm, "gs://b/lake/t")
+    watermark.write_watermark(wm, "gs://b/lake/t")  # replaces an existing file
+    assert watermark.read_watermark("gs://b/lake/t", "s", "t", "c", "x") == wm
+    assert len(created) == 3 and all(p.endswith(".tmp") for p in created), created
+    assert sorted(files) == ["gs://b/ck/_pq_generation.json", "gs://b/lake/t/sync.json"]
+
+
 @settings(max_examples=4, deadline=None)
 @given(
     st.lists(st.tuples(st.integers(0, 2), st.integers(0, 50)), min_size=1, max_size=20),

@@ -2106,22 +2106,23 @@ def test_compaction_commit_floor_and_major_multiple(spark, tmp_path):
         )
 
 
-def test_compact_major_every_zero_rejected(spark, tmp_path):
+@pytest.mark.parametrize(
+    "sink",
+    [
+        "stream_dedup_admission",
+        "stream_substring_admission",
+        "stream_semantic_admission",
+        "stream_fingerprint_admission",
+    ],
+)
+def test_compact_major_every_zero_rejected(spark, tmp_path, sink):
     """compact_major_every=0 satisfies the modulo check but makes the
     major cadence falsy (majors silently never run — unbounded segment
-    growth); both sinks must reject it (r7 review)."""
-    from pyspark_ingestion_spark.streaming.pipeline import (
-        stream_dedup_admission,
-        stream_substring_admission,
-    )
+    growth); every admission sink must reject it (r7 review)."""
+    from pyspark_ingestion_spark.streaming import pipeline
 
     with pytest.raises(ValueError, match="positive multiple"):
-        stream_dedup_admission(
-            None, None, "x", "y", index_path="z",
-            compact_every=4, compact_major_every=0,
-        )
-    with pytest.raises(ValueError, match="positive multiple"):
-        stream_substring_admission(
+        getattr(pipeline, sink)(
             None, None, "x", "y", index_path="z",
             compact_every=4, compact_major_every=0,
         )
@@ -2504,20 +2505,28 @@ def test_semantic_indexed_nprobe_requires_persisted_quantizer(spark, tmp_path):
     assert {r["vec_id"] for r in rejects.collect()} == {10}
 
 
-def test_overlapped_write_surfaces_both_failures():
+def test_overlapped_write_surfaces_both_failures(monkeypatch):
     """r12 ADVICE: when the index-maintenance chain raises inside the
     overlap block, the concurrent admitted-text write's outcome must
     still surface — under the bare executor form a write failure was
     silently masked by the index error (executor shutdown discards the
     future's outcome), so the batch's error report could name the
     wrong failing sink. Pure-Python pin on the shared context manager
-    all three sinks (hotlog/substring/fingerprint) now route through."""
+    every admission sink routes its writes through; each write failure
+    names its batch, table and path."""
     import pytest
 
-    from pyspark_ingestion_spark.streaming.pipeline import _overlapped_write
+    from pyspark_ingestion_spark.streaming import pipeline
+    from pyspark_ingestion_spark.streaming.pipeline import _overlapped_writes
 
-    def bad_write():
-        raise OSError("disk full in text write")
+    done = []
+
+    def fake_write(df, path, batch_id):
+        if df == "bad":
+            raise OSError(f"disk full in {path}")
+        done.append((df, path, batch_id))
+
+    monkeypatch.setattr(pipeline, "_write_batch_partition", fake_write)
 
     # both failed: the index error is primary, the write error rides
     # along as a NOTE (r13 ADVICE: the r12 form re-raised inside the
@@ -2525,7 +2534,8 @@ def test_overlapped_write_surfaces_both_failures():
     # was itself chained lost part of its traceback). The index error's
     # ORIGINAL chain must survive intact.
     with pytest.raises(RuntimeError, match="index chain broke") as exc:
-        with _overlapped_write(bad_write):
+        with _overlapped_writes(3) as (submit, _wait):
+            submit("admitted-text", "bad", "/out")
             try:
                 raise KeyError("original inner cause")
             except KeyError:
@@ -2535,26 +2545,50 @@ def test_overlapped_write_surfaces_both_failures():
     )
     notes = "\n".join(getattr(exc.value, "__notes__", []))
     assert "disk full" in notes and "OSError" in notes
+    assert "batch 3: admitted-text write to /out failed" in notes
 
-    # write failed, chain fine: the write error raises (r11 contract)
-    with pytest.raises(OSError, match="disk full"):
-        with _overlapped_write(bad_write):
-            pass
+    # write failed, chain fine: the write error raises (r11 contract),
+    # naming its batch and table
+    with pytest.raises(OSError, match="disk full") as exc:
+        with _overlapped_writes(4) as (submit, _wait):
+            submit("admitted-text", "bad", "/out")
+    assert exc.value.__notes__ == ["batch 4: admitted-text write to /out failed"]
 
     # write fine, chain failed: chain error raises; the write still ran
     # to completion (the batch's committed out_path partition is the
     # documented replay-overwrite-recoverable case)
-    done = []
     with pytest.raises(RuntimeError, match="index chain broke"):
-        with _overlapped_write(done.append, 1):
+        with _overlapped_writes(5) as (submit, _wait):
+            submit("admitted-text", "ok", "/out")
             raise RuntimeError("index chain broke")
-    assert done == [1]
+    assert done == [("ok", "/out", 5)]
 
     # both fine: write joined before the block returns
-    done2 = []
-    with _overlapped_write(done2.append, 2):
-        pass
-    assert done2 == [2]
+    done.clear()
+    with _overlapped_writes(6) as (submit, _wait):
+        submit("admitted-text", "ok", "/out")
+    assert done == [("ok", "/out", 6)]
+
+    # N-ary: every write is joined; the first failure (submit order) is
+    # raised, later failures ride along as notes, successes complete;
+    # wait() joins early and raises the named write's failure at once
+    done.clear()
+    with pytest.raises(OSError, match="/idx/postings") as exc:
+        with _overlapped_writes(7) as (submit, _wait):
+            submit("admitted-text", "ok", "/out")
+            submit("postings", "bad", "/idx/postings")
+            submit("bands", "ok", "/idx/bands")
+            submit("dfcnt", "bad", "/idx/dfcnt")
+    notes = "\n".join(exc.value.__notes__)
+    assert notes.startswith("batch 7: postings write to /idx/postings failed")
+    assert "batch 7: dfcnt write to /idx/dfcnt failed" in notes
+    assert sorted(done) == [("ok", "/idx/bands", 7), ("ok", "/out", 7)]
+    with pytest.raises(OSError, match="/idx/hot") as exc:
+        with _overlapped_writes(8) as (submit, wait):
+            submit("hot", "bad", "/idx/hot")
+            wait("hot")
+            raise AssertionError("wait() must raise the joined failure")
+    assert exc.value.__notes__ == ["batch 8: hot write to /idx/hot failed"]
 
 
 def test_sink_rejects_executed_shuffle_stages(spark, tmp_path):
@@ -3348,7 +3382,12 @@ def test_pq_generation_cutover_guard(spark, tmp_path):
         stream_ivf_pq_assign(stream2, layout_b, ck_s)
 
 
-def test_admission_sink_single_source_evaluation(spark, tmp_path):
+@pytest.mark.parametrize(
+    "admit",
+    ["dedup_indexed", "substring_indexed", "semantic_indexed",
+     "fingerprint_indexed", "recompute"],
+)
+def test_admission_sink_single_source_evaluation(spark, tmp_path, admit):
     """r15 (VERDICT r14 item 6): pin the one-evaluation-per-micro-batch
     contract. The sink's entry checkpoint is what keeps a Python-backed
     batch source from being re-evaluated by every consumer (rejects
@@ -3357,34 +3396,211 @@ def test_admission_sink_single_source_evaluation(spark, tmp_path):
     lineage fork would silently reintroduce N evaluations and only show
     up as a bench regression. A counting mapInPandas source + a task
     accumulator make the contract a hard assertion: one partition, one
-    evaluation, accumulator == 1 after the whole batch."""
+    evaluation, accumulator == 1 after the whole batch — for every
+    indexed admit function and the shared recompute body."""
+    from pyspark_ingestion_spark.operators.dedup import (
+        incremental_substring_rejects,
+    )
+    from pyspark_ingestion_spark.operators.multimodal import (
+        image_dhash,
+        synthesize_bmp_payload,
+    )
     from pyspark_ingestion_spark.streaming.pipeline import (
         _admit_dedup_batch_indexed,
+        _admit_fingerprint_batch_indexed,
+        _admit_recompute,
+        _admit_semantic_batch_indexed,
+        _admit_substring_batch_indexed,
     )
 
-    base = spark.createDataFrame(
-        [(i, f"base doc {i} alpha beta gamma delta epsilon") for i in range(20)],
-        "doc_id long, text string",
-    )
     acc = spark.sparkContext.accumulator(0)
 
     def counted(it):
         acc.add(1)
         yield from it
 
-    src = spark.createDataFrame(
-        [(100 + i, f"fresh doc {i} zeta eta theta iota kappa") for i in range(10)],
-        "doc_id long, text string",
-    ).coalesce(1)
-    bdf = src.mapInPandas(counted, "doc_id long, text string")
+    def texts(start, word, rep=1):
+        return spark.createDataFrame(
+            [(start + i, f"{word} doc {i} alpha beta gamma delta epsilon " * rep)
+             for i in range(10)],
+            "doc_id long, text string",
+        )
 
-    _admit_dedup_batch_indexed(
-        bdf, 0, base, str(tmp_path / "out"), str(tmp_path / "idx"),
-        id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
-        threshold_num=1, threshold_den=2, max_doc_freq=5,
-        max_bucket_size=None, index_mode="hotlog",
-    )
+    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+    if admit == "semantic_indexed":
+        schema = "vec_id long, embedding array<double>"
+        base = spark.createDataFrame(
+            [(i, [float(i), 1.0, -1.0, 0.5]) for i in range(20)], schema
+        )
+        src = spark.createDataFrame(
+            [(100 + i, [-1.0, float(i), 1.0, -0.5]) for i in range(10)], schema
+        )
+    elif admit == "fingerprint_indexed":
+        schema = "doc_id long, payload binary"
+        base = synthesize_bmp_payload(texts(0, "base", 8), "doc_id", "text", width=12)
+        src = synthesize_bmp_payload(
+            texts(100, "fresh", 8), "doc_id", "text", width=12
+        )
+    else:
+        schema = "doc_id long, text string"
+        base, src = texts(0, "base"), texts(100, "fresh")
+    bdf = src.coalesce(1).mapInPandas(counted, schema)
+
+    if admit == "dedup_indexed":
+        _admit_dedup_batch_indexed(
+            bdf, 0, base, out, idx,
+            id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
+            threshold_num=1, threshold_den=2, max_doc_freq=5,
+            max_bucket_size=None, index_mode="hotlog",
+        )
+    elif admit == "substring_indexed":
+        _admit_substring_batch_indexed(
+            bdf, 0, base, out, idx, id_col="doc_id", text_col="text", k=10,
+            min_len=10, max_window_df=5, sample_mod=None,
+        )
+    elif admit == "semantic_indexed":
+        _admit_semantic_batch_indexed(
+            bdf, 0, base, out, idx, id_col="vec_id", vec_col="embedding",
+            threshold=0.9, n_dims=4,
+        )
+    elif admit == "fingerprint_indexed":
+        _admit_fingerprint_batch_indexed(
+            bdf, 0, base, out, idx, hash_fn=image_dhash,
+            hash_cols=("dh_hi", "dh_lo"), id_col="doc_id", radius=7,
+        )
+    else:
+        _admit_recompute(
+            bdf, 0, base, out, ("doc_id", "text"),
+            lambda corpus, batch: incremental_substring_rejects(
+                corpus, batch, "doc_id", "text", k=10
+            ),
+        )
     assert acc.value == 1, (
         f"batch source evaluated {acc.value} times — the sink's entry "
         "checkpoint no longer pins one evaluation per micro-batch"
     )
+
+
+@pytest.mark.parametrize("sink", ["hotlog", "substring", "fingerprint"])
+def test_overlapped_write_failure_replays_clean(spark, tmp_path, monkeypatch, sink):
+    """Every sink keeps its exactly-once replay contract when a crash
+    hits its overlapped writes: with some tables' ``overwrite_partitions``
+    failing, the batch raises carrying a ``batch <id>: <table> write to
+    <path> failed`` note for each of them while the other writes still
+    commit. Two crashed attempts of the same batch id — first only the
+    admitted-output write fails (the index partitions commit, so the
+    replay must exclude its own index rows), then every index write
+    fails (the output commits) — and a final replay without the fault
+    leaves the admitted output and every index partition equal to a
+    clean run's."""
+    import shutil
+
+    from pyspark_ingestion_spark.operators.multimodal import (
+        image_dhash,
+        synthesize_bmp_payload,
+    )
+    from pyspark_ingestion_spark.sources import writers
+    from pyspark_ingestion_spark.streaming.pipeline import (
+        _admit_dedup_batch_indexed,
+        _admit_fingerprint_batch_indexed,
+        _admit_substring_batch_indexed,
+    )
+
+    boiler = "subscribe to our newsletter for the latest updates"
+
+    def texts(start, n, seed):
+        return spark.createDataFrame(
+            [(start + i, f"{boiler} doc {seed}x{i} topic {i % 3}")
+             for i in range(n)],
+            "doc_id long, text string",
+        )
+
+    # batch 1 repeats two base docs (rejected) next to fresh ones
+    if sink == "fingerprint":
+        import random
+
+        def media(start, n, seed):
+            rnd = random.Random(seed)
+            df = spark.createDataFrame(
+                [(start + i, "".join(chr(rnd.randrange(32, 127)) for _ in range(360)))
+                 for i in range(n)],
+                "doc_id long, text string",
+            )
+            return synthesize_bmp_payload(df, "doc_id", "text", width=12)
+
+        base, b0 = media(0, 8, 0), media(100, 4, 1)
+        b1 = media(200, 4, 2).unionByName(media(0, 2, 0))
+
+        def admit(bdf, bid, root):
+            _admit_fingerprint_batch_indexed(
+                bdf, bid, base, f"{root}/out", f"{root}/idx",
+                hash_fn=image_dhash, hash_cols=("dh_hi", "dh_lo"),
+                id_col="doc_id", radius=3,
+            )
+
+        tables = {"media": "out", "fprints": "idx/fprints"}
+    else:
+        base = texts(0, 8, 0)
+        b0 = texts(100, 4, 1)
+        b1 = texts(200, 4, 2).unionByName(
+            texts(0, 2, 0).withColumn("doc_id", F.col("doc_id") + 300)
+        )
+        if sink == "hotlog":
+            def admit(bdf, bid, root):
+                _admit_dedup_batch_indexed(
+                    bdf, bid, base, f"{root}/out", f"{root}/idx",
+                    id_col="doc_id", text_col="text", n=3, num_hashes=8,
+                    band_size=2, threshold_num=1, threshold_den=2,
+                    max_doc_freq=4, max_bucket_size=None, index_mode="hotlog",
+                )
+
+            tables = {"admitted-text": "out", "postings": "idx/postings",
+                      "dfcnt-delta": "idx/dfcnt", "bands": "idx/bands",
+                      "hot": "idx/hot"}
+        else:
+            def admit(bdf, bid, root):
+                _admit_substring_batch_indexed(
+                    bdf, bid, base, f"{root}/out", f"{root}/idx",
+                    id_col="doc_id", text_col="text", k=20, min_len=20,
+                    max_window_df=4, sample_mod=None,
+                )
+
+            tables = {"admitted-text": "out", "windows": "idx/windows",
+                      "dfcnt": "idx/dfcnt"}
+
+    def state(root):
+        return {
+            t: sorted((tuple(r) for r in spark.read.parquet(f"{root}/{t}").collect()),
+                      key=repr)
+            for t in tables.values()
+        }
+
+    clean, after0 = str(tmp_path / "clean"), str(tmp_path / "after0")
+    admit(b0, 0, clean)
+    shutil.copytree(clean, after0)
+    admit(b1, 1, clean)
+    want = state(clean)
+    admitted1 = [r for r in want["out"] if str(r[-1]) == "1"]
+    assert 0 < len(admitted1) < 6, admitted1  # batch 1 admits AND rejects
+
+    root = str(tmp_path / "crashed")
+    shutil.copytree(after0, root)
+    real = writers.overwrite_partitions
+    output, *index = tables.items()
+    for failing_tables in ([output], index):
+        targets = {f"{root}/{table}": name for name, table in failing_tables}
+
+        def failing(df, path, *args, _targets=targets, **kwargs):
+            if path in _targets:
+                raise OSError(f"injected failure writing {path}")
+            return real(df, path, *args, **kwargs)
+
+        monkeypatch.setattr(writers, "overwrite_partitions", failing)
+        with pytest.raises(OSError, match="injected failure") as exc:
+            admit(b1, 1, root)
+        notes = "\n".join(exc.value.__notes__)
+        for path, name in targets.items():
+            assert f"batch 1: {name} write to {path} failed" in notes, notes
+    monkeypatch.setattr(writers, "overwrite_partitions", real)
+    admit(b1, 1, root)  # the replay
+    assert state(root) == want
