@@ -91,25 +91,17 @@ def _priority(name: str) -> tuple:
 #: proof would attest different semantics, so they re-verify as if never
 #: checked (ahead of the LRV rotation).
 _CHANGED_THIS_ROUND = {
-    # r14: ivf_drift_flags gained the zero-baseline guard (ADVICE r13:
-    # drift_ratio is now NULL instead of Inf/NaN when baseline_avg = 0,
-    # retrain decides directly) — semantics changed on BOTH sides
-    "ann_ivf_drift_monitor",
-    # r14: the hilbert oracle gained the mirrored range guard (ADVICE
-    # r13) — oracle text changed, so the old proof attests a different
-    # SQL string
-    "hilbert_layout_pruning",
-    # r14: bloom_might_contain was rebuilt as a native Column
-    # expression (forall/getbit, Column|str key) and prebuilt states
-    # became shape-validated BloomState — re-prove the rows that run
-    # the ARMED probe path (the md5 fixture twin, bloom_fixture_sketch,
-    # is never-verified and enters ahead of the rotation automatically)
-    "bloom_prefilter_decontaminate",
-    "dedup_incremental_decontaminate",
-    # r14: bloom_build's positions now come from the shared _position
-    # helper (hash_mode dispatch) — expression-identical by design,
-    # re-prove the direct sketch row anyway (cheap, rows-only)
-    "agg_bloom_sketch",
+    # r15: the MinHash-LSH shingle, signature and band expressions are
+    # each parsed from one SQL string (parity-tested against the old
+    # Column-API builders) — re-prove the registry rows that run them
+    "dedup_minhash_lsh",
+    "dedup_incremental_lsh",
+    "dedup_lsh_recall_eval",
+    # r15 reworked the streaming admission sinks that wrap these
+    # fixtures' rejects operators (fingerprint_batch_rejects,
+    # embedding_batch_rejects) — re-prove the operator rows
+    "dedup_fingerprint_salted_admission_fixture",
+    "dedup_semantic_salted_admission_fixture",
 }
 
 

@@ -92,8 +92,8 @@ def _stream_admission_ctx(
     words_per_doc: int = 40,
 ):
     """Per-batch hotlog indexed streaming admission on a fixed
-    deterministic workload — the sink body of
-    ``stream_dedup_admission(index_mode="hotlog")``, which equivalence
+    deterministic workload — the sink body of indexed
+    ``stream_dedup_admission``, which equivalence
     tests pin to the recompute form. Returns ``run(bid) -> sec`` so the
     main loop can interleave the three stream families into per-batch
     PASSES with IO-probe fences (r12); batch 0 pays the one-time
@@ -119,8 +119,7 @@ def _stream_admission_ctx(
     base = spark.read.parquet(f"{tmp}/base")
     kwargs = dict(id_col="doc_id", text_col="text", n=3, num_hashes=8,
                   band_size=2, threshold_num=1, threshold_den=2,
-                  max_doc_freq=25, max_bucket_size=None,
-                  index_mode="hotlog")
+                  max_doc_freq=25, max_bucket_size=None)
 
     def run(bid: int) -> float:
         # r14 measurement fix (guide §1.4): the batch rows enter through

@@ -499,7 +499,7 @@ def stream_dedup_admission(
     max_doc_freq: int | float | None = 25,
     max_bucket_size: int | None = None,
     index_path: str | None = None,
-    index_mode: str = "fingerprint",
+    index_mode: str = "hotlog",
     compact_every: int | None = None,
     compact_major_every: int | None = None,
     bucket_cap_mode: str = "drop",
@@ -533,14 +533,12 @@ def stream_dedup_admission(
     released after every batch so a long-lived stream never accumulates
     CacheManager entries.
 
-    ``index_mode`` picks the index maintenance strategy:
-    ``"fingerprint"`` (default — staleness detected per batch by
-    comparing per-doc capping fingerprints against the postings, works
-    for any df cap) or ``"hotlog"`` (integer caps only: df-count deltas
-    + a hot-transition log remove the read path's corpus-wide
-    aggregates entirely; measured A/B in SCALING.md).
+    The index keeps df-count deltas and a hot-transition log, so the
+    read path runs no corpus-wide aggregate; that needs an integer
+    ``max_doc_freq`` (or None). Fractional caps run on the recompute
+    form. ``index_mode`` accepts only ``"hotlog"``, the one index form.
 
-    ``compact_every`` / ``compact_major_every`` (indexed forms only)
+    ``compact_every`` / ``compact_major_every`` (indexed form only)
     fold the index with :func:`compact_admission_index`; without it the
     per-batch cost grows O(versions) in the bands max and O(batches) in
     the dfcnt scan and the postings/hot small-file counts (measured over
@@ -552,11 +550,16 @@ def stream_dedup_admission(
     ~probe_salts·cap candidate partners near a POPULAR corpus cluster
     that drop mode silently admits past. Same per-batch cost shape as
     drop (both pay the one corpus-band aggregate for the oversized
-    list); the probe replicates only batch rows. Threaded through both
-    indexed modes and the recompute form, so the equivalence pins hold
-    per mode.
+    list); the probe replicates only batch rows. Threaded through the
+    indexed and the recompute form, so the equivalence pins hold.
     """
-    _validate_index_mode(index_mode, max_doc_freq)
+    if index_mode != "hotlog":
+        raise ValueError(
+            f"index_mode {index_mode!r}: the fingerprint index mode was "
+            "retired; 'hotlog' is the only index form"
+        )
+    if index_path is not None:
+        _check_index_cap(max_doc_freq)
     schedule = _compaction_schedule(index_path, compact_every, compact_major_every)
     kw = dict(
         id_col=id_col, text_col=text_col, n=n, num_hashes=num_hashes,
@@ -568,7 +571,7 @@ def stream_dedup_admission(
     _run_admission_sink(
         stream_df, checkpoint, index_path, schedule, compact_admission_index,
         lambda b, i: _admit_dedup_batch_indexed(
-            b, i, base_corpus, out_path, index_path, index_mode=index_mode, **kw
+            b, i, base_corpus, out_path, index_path, **kw
         ),
         lambda b, i: _admit_dedup_batch(b, i, base_corpus, out_path, **kw),
     )
@@ -618,16 +621,15 @@ def _admit_dedup_batch(
         release_shingle_caches(keep=prior_caches)
 
 
-#: the admission index lives in two tables under ``index_path``, both
+#: the admission index lives in four tables under ``index_path``, all
 #: partitioned by ``__batch_id`` so index writes share the out_path
 #: replay contract (a replayed batch overwrites exactly its own
 #: partition). Base-corpus rows live in partition ``__batch_id=-1``.
 _IDX_POSTINGS = "postings"  # (doc, shingle)            — UNCAPPED
 _IDX_BANDS = "bands"        # (doc, band, band_key, capped_size, capped_xor)
-#: hotlog-mode extras (``index_mode="hotlog"``): the per-batch df-count
-#: deltas and the hot-transition log that replace the read path's two
-#: O(corpus-postings) aggregates (hot-shingle counts + staleness
-#: fingerprints) with reads of O(batch)/O(hot) tables.
+#: the per-batch df-count deltas and the hot-transition log, which keep
+#: every corpus-wide aggregate (hot-shingle counts, band staleness) off
+#: the read path: it reads O(batch)/O(hot) tables instead.
 _IDX_DFCNT = "dfcnt"        # (shingle, cnt)  — batch's ADMITTED df delta
 _IDX_HOT = "hot"            # (shingle)       — became hot as of this batch
 
@@ -637,12 +639,13 @@ def _index_band_rows(
 ) -> DataFrame:
     """Band-index rows for every doc in ``doc_ids`` from its (already
     df-capped, already restricted) shingle rows ``capped``: one row per
-    (doc, band) plus the capping fingerprint (capped_size, capped_xor)
-    that staleness detection compares. Docs with ZERO capped shingles
-    (all-hot boilerplate, NULL text) get a TOMBSTONE row (band=-1) so
-    they stay visible to staleness detection — without it a doc whose
-    shingles later drop back under a fractional df cap could never be
-    re-banded."""
+    (doc, band) plus the doc's capping fingerprint (capped_size,
+    capped_xor). Docs with ZERO capped shingles (all-hot boilerplate,
+    NULL text) get a TOMBSTONE row (band=-1): under latest-wins it
+    shadows the older band rows of a doc whose shingles all went hot,
+    and every band read filters it out. No read path uses the
+    fingerprint columns; they stay because they are part of the on-disk
+    band layout existing indexes carry."""
     from pyspark_ingestion_spark.operators.dedup import (
         _bands_from_wide,
         _wide_signatures,
@@ -707,19 +710,15 @@ def init_dedup_admission_index(
     n: int = 3,
     num_hashes: int = 8,
     band_size: int = 2,
-    max_doc_freq: int | float | None = 25,
-    index_mode: str = "fingerprint",
+    max_doc_freq: int | None = 25,
 ) -> None:
     """One-time index bootstrap: shingle the base corpus ONCE, persist
-    the postings and the df-capped band table under ``__batch_id=-1``.
-    This is the only time the base corpus text is ever scanned by the
-    indexed admission path. Idempotent (dynamic partition overwrite of
-    the base partition), so a crash mid-bootstrap just re-runs it.
-
-    ``index_mode="hotlog"`` additionally seeds the df-count table (the
-    base corpus's per-shingle document frequencies) and the hot log (the
-    shingles already at/over the cap) — the state that lets every later
-    batch skip corpus-wide aggregates.
+    the postings, the df-capped band table, the hot log (the shingles
+    already over the cap) and the df-count table (the base corpus's
+    per-shingle document frequencies) under ``__batch_id=-1``. This is
+    the only time the base corpus text is ever scanned by the indexed
+    admission path. Idempotent (dynamic partition overwrite of the base
+    partition), so a crash mid-bootstrap just re-runs it.
 
     Parameters must match the ``stream_dedup_admission`` call that will
     consume the index — the band layout (num_hashes × band_size) and the
@@ -727,7 +726,7 @@ def init_dedup_admission_index(
     """
     from pyspark_ingestion_spark.operators.dedup import _hot_shingles, _shingle_table
 
-    _validate_index_mode(index_mode, max_doc_freq)
+    _check_index_cap(max_doc_freq)
     spark = base_corpus.sparkSession
     base = base_corpus.select(id_col, text_col)
     posts = _shingle_table(base, id_col, text_col, n)
@@ -745,185 +744,38 @@ def init_dedup_admission_index(
     ids = base.select(F.col(id_col).alias("doc"))
     rows = _index_band_rows(capped, ids, num_hashes, band_size)
     _write_batch_partition(rows, f"{index_path}/{_IDX_BANDS}", -1)
-    if index_mode == "hotlog":
-        cnt = stored.groupBy("shingle").agg(F.count(F.lit(1)).alias("cnt"))
-        # same STRICT semantics as _hot_shingles: hot means df > cap.
-        # WRITE ORDER IS LOAD-BEARING: the bootstrap-completion probe in
-        # _admit_dedup_batch_indexed targets dfcnt, so dfcnt must be the
-        # LAST table written — a crash between the hot write and the
-        # dfcnt write re-runs the (idempotent) bootstrap, whereas the
-        # reverse order would leave has_base=True with the hot seed
-        # missing, a divergence the hot-transition maintenance can never repair
-        # (its crossing filter requires prev <= cap, but the base counts
-        # are already past it).
-        base_hot = (
-            cnt.filter(F.col("cnt") > F.lit(int(max_doc_freq))).select("shingle")
-            if max_doc_freq is not None
-            else cnt.filter(F.lit(False)).select("shingle")
-        )
-        _write_batch_partition(base_hot, f"{index_path}/{_IDX_HOT}", -1)
-        _write_batch_partition(cnt, f"{index_path}/{_IDX_DFCNT}", -1)
-
-
-def _validate_index_mode(index_mode: str, max_doc_freq: int | float | None) -> None:
-    """hotlog correctness rests on the hot set growing MONOTONICALLY —
-    true for an integer df cap (counts only increase), false for a
-    fractional cap (the threshold count itself moves with corpus size,
-    so shingles can cross in either direction, which only the
-    fingerprint mode's per-doc comparison catches)."""
-    if index_mode not in ("fingerprint", "hotlog"):
-        raise ValueError(f"unknown index_mode {index_mode!r}")
-    if index_mode == "hotlog" and max_doc_freq is not None:
-        if not (isinstance(max_doc_freq, int) and not isinstance(max_doc_freq, bool)):
-            raise ValueError(
-                "index_mode='hotlog' requires an INTEGER max_doc_freq (or None): "
-                "a fractional cap's hot set is not monotone — use the "
-                "fingerprint mode for fractional caps"
-            )
-
-
-def _corpus_bands_capped(
-    band_rows: DataFrame,
-    max_bucket_size: int | None,
-    bucket_cap_mode: str,
-    probe_salts: int,
-):
-    """Shared bucket-cap dispatch for the indexed LSH read paths:
-    returns ``(bands_c, salt_probe)`` for ``_lsh_admission_tail``.
-    Drop mode anti-joins the oversized-bucket list away (the r7 guard);
-    salt mode (r12, VERDICT r11 item 3) salts the corpus rows and hands
-    the tail the bucket list so the batch side probes
-    ``min(n_salts, probe_salts)`` sub-buckets. Both modes pay the SAME
-    one corpus-band aggregate per batch (the oversized list) — salt
-    adds only O(batch·probe_salts) replication on the broadcast-small
-    batch side, so the sinks' O(batch) shape is unchanged."""
-    from pyspark_ingestion_spark.operators.dedup import (
-        _drop_big_buckets,
-        _oversized_bucket_salts,
-        _salt_corpus_bands,
+    cnt = stored.groupBy("shingle").agg(F.count(F.lit(1)).alias("cnt"))
+    # same STRICT semantics as _hot_shingles: hot means df > cap.
+    # WRITE ORDER IS LOAD-BEARING: the bootstrap-completion probe in
+    # _admit_dedup_batch_indexed targets dfcnt, so dfcnt must be the
+    # LAST table written — a crash between the hot write and the
+    # dfcnt write re-runs the (idempotent) bootstrap, whereas the
+    # reverse order would leave has_base=True with the hot seed
+    # missing, a divergence the hot-transition maintenance can never repair
+    # (its crossing filter requires prev <= cap, but the base counts
+    # are already past it).
+    base_hot = (
+        cnt.filter(F.col("cnt") > F.lit(max_doc_freq)).select("shingle")
+        if max_doc_freq is not None
+        else cnt.filter(F.lit(False)).select("shingle")
     )
+    _write_batch_partition(base_hot, f"{index_path}/{_IDX_HOT}", -1)
+    _write_batch_partition(cnt, f"{index_path}/{_IDX_DFCNT}", -1)
 
-    if bucket_cap_mode not in ("drop", "salt"):
+
+def _check_index_cap(max_doc_freq: int | float | None) -> None:
+    """The index's correctness rests on the hot set growing
+    MONOTONICALLY — true for an integer df cap (counts only increase),
+    false for a fractional cap (the threshold count itself moves with
+    corpus size, so shingles can cross in either direction)."""
+    if max_doc_freq is not None and (
+        not isinstance(max_doc_freq, int) or isinstance(max_doc_freq, bool)
+    ):
         raise ValueError(
-            f"bucket_cap_mode must be 'drop' or 'salt', got {bucket_cap_mode!r}"
+            "the admission index requires an INTEGER max_doc_freq (or None): "
+            "a fractional cap's hot set is not monotone — run the recompute "
+            "form (index_path=None) for fractional caps"
         )
-    if bucket_cap_mode == "salt" and max_bucket_size is not None:
-        big_salts = _oversized_bucket_salts(band_rows, max_bucket_size)
-        return (
-            _salt_corpus_bands(band_rows, big_salts),
-            (big_salts, probe_salts),
-        )
-    return _drop_big_buckets(band_rows, max_bucket_size), None
-
-
-def _indexed_rejects(
-    spark: SparkSession,
-    batch: DataFrame,
-    index_path: str,
-    batch_id: int,
-    id_col: str,
-    n: int,
-    num_hashes: int,
-    band_size: int,
-    threshold_num: int,
-    threshold_den: int,
-    max_doc_freq: int | float | None,
-    max_bucket_size: int | None,
-    text_col: str = "text",
-    bucket_cap_mode: str = "drop",
-    probe_salts: int = 4,
-):
-    """Index-driven admission for one micro-batch. Returns
-    ``(rejects, sb, stale_rows)``:
-
-    - ``rejects`` — distinct batch ids to drop (same contract as
-      ``incremental_lsh_rejects``);
-    - ``sb`` — the batch's df-capped shingle table (reused by the sink
-      to derive the admitted docs' band rows without re-shingling);
-    - ``stale_rows`` — re-banded rows for corpus docs whose df-capped
-      shingle set changed since they were last banded (None when the
-      df cap is off — append-only corpora can't invalidate bands any
-      other way).
-
-    Exposed module-level (not closed over by the sink) so tests can
-    assert the plan property directly: NO input of this computation is
-    the corpus text — only the postings/bands index and the batch.
-
-    Equivalence with the recompute form: the postings table holds
-    exactly ``_shingle_table(corpus)`` (persisted at admission instead
-    of re-derived), so the hot-shingle set, the capped shingle universe,
-    the band keys and the Jaccard verify all see identical rows. The df
-    cap makes old docs' bands time-dependent (a shingle crossing the cap
-    changes its docs' signatures); staleness detection catches that by
-    comparing each doc's stored capping fingerprint (count + xor of
-    xxhash64(shingle)) against the current capped postings and
-    re-banding the diffs, so the effective band table equals the
-    recompute form's. (A false fingerprint match needs a 64-bit xor
-    collision between a doc's old and new capped sets; with an integer
-    df cap even the count alone is exact, since the hot set only grows.)
-
-    Per-batch cost: O(batch) shingling + one aggregate over the postings
-    index (map-side combined, narrow rows — df counts + staleness
-    fingerprints) + the band join. The corpus TEXT is never read.
-    SCALING.md sketches the next rung (an incrementally-maintained df
-    table + hot-transition log) that removes the postings aggregate too.
-    """
-    from pyspark_ingestion_spark.operators.dedup import (
-        _hot_shingles,
-        _lsh_admission_tail,
-        _shingle_table,
-    )
-
-    posts = (
-        _read_idx_parquet(spark, f"{index_path}/{_IDX_POSTINGS}")
-        .filter(F.col("__batch_id").cast("long") != batch_id)
-        .select("doc", "shingle")
-    )
-    sb = _shingle_table(batch, id_col, text_col, n)
-    capped_c = posts
-    if max_doc_freq is not None:
-        hot = F.broadcast(_hot_shingles(posts, max_doc_freq))
-        capped_c = posts.join(hot, "shingle", "left_anti")
-        sb = sb.join(hot, "shingle", "left_anti")
-
-    stored = _read_latest_bands(spark, f"{index_path}/{_IDX_BANDS}", batch_id)
-    stale_rows = None
-    cur_bands = stored
-    if max_doc_freq is not None:
-        stored_fp = stored.select("doc", "capped_size", "capped_xor").distinct()
-        cur_fp = capped_c.groupBy("doc").agg(
-            F.count(F.lit(1)).alias("__cs"),
-            F.bit_xor(F.xxhash64("shingle")).alias("__cx"),
-        )
-        stale_ids = (
-            stored_fp.join(cur_fp, "doc", "left")
-            .filter(
-                (F.coalesce(F.col("__cs"), F.lit(0)) != F.col("capped_size"))
-                | (F.coalesce(F.col("__cx"), F.lit(0)) != F.col("capped_xor"))
-            )
-            .select("doc")
-        )
-        # cut lineage: stale_rows feeds both the candidate join and the
-        # index write — bounded (docs touching a cap transition), and the
-        # LogicalRDD plan lets the bands write not read the bands table
-        stale_rows = _index_band_rows(
-            capped_c.join(F.broadcast(stale_ids), "doc"),
-            stale_ids,
-            num_hashes,
-            band_size,
-        ).localCheckpoint(eager=False)
-        cur_bands = stored.join(stale_ids, "doc", "left_anti").unionByName(stale_rows)
-
-    bands_c, salt_probe = _corpus_bands_capped(
-        cur_bands.filter(F.col("band") >= 0).select("doc", "band", "band_key"),
-        max_bucket_size, bucket_cap_mode, probe_salts,
-    )
-    rejects = _lsh_admission_tail(
-        sb, capped_c, bands_c, id_col, num_hashes, band_size,
-        threshold_num, threshold_den, broadcast_verify=True,
-        salt_probe=salt_probe,
-    )
-    return rejects, sb, stale_rows
 
 
 def _read_hot_log(
@@ -965,41 +817,57 @@ def _indexed_rejects_hotlog(
     bucket_cap_mode: str = "drop",
     probe_salts: int = 4,
 ):
-    """Hot-log admission for one micro-batch — the rung above
-    :func:`_indexed_rejects`: the read path runs ZERO corpus-wide
-    aggregates over POSTINGS. Returns ``(rejects, sb)`` where ``sb`` is
-    the batch's df-capped shingle table.
+    """Index-driven admission for one micro-batch: the read path runs
+    ZERO corpus-wide aggregates over POSTINGS. Returns ``(rejects, sb)``
+    where ``rejects`` are the distinct batch ids to drop (same contract
+    as ``incremental_lsh_rejects``) and ``sb`` is the batch's df-capped
+    shingle table (reused by the sink to band the admitted docs without
+    re-shingling). Module-level so tests can assert the plan property
+    directly: NO input of this computation is the corpus text — only
+    the index and the batch.
 
-    The fingerprint mode's two per-batch O(corpus-postings) shuffles —
-    the hot-shingle df aggregate and the staleness fingerprint aggregate
-    (together they dominate its ~47 s steady-state batch on an
-    8M-posting local corpus; hotlog's same batch is ~15 s — measured
-    3-arm A/B in SCALING.md) — are replaced by a read of the persisted
-    HOT LOG (O(hot) rows) broadcast into anti-joins on both sides.
-    Staleness never needs detecting here because the batch that CAUSES a
-    cap crossing re-bands the affected docs eagerly at write time
-    (:func:`_hot_transitions_plan` + :func:`_hot_transition_rebands`) — by induction the band table read
-    back at batch b is already correct w.r.t. the hot set through
-    b − 1, which is exactly the set admission must use (the fingerprint
-    mode computes hot from postings excluding the current batch).
+    Equivalence with the recompute form: the postings table holds
+    exactly ``_shingle_table(corpus)`` (persisted at admission instead
+    of re-derived), and the hot set is read from the persisted HOT LOG
+    (O(hot) rows) broadcast into anti-joins on both sides. The df cap
+    makes old docs' bands time-dependent (a shingle crossing the cap
+    changes its docs' signatures), but staleness never needs detecting
+    here: the batch that CAUSES a cap crossing re-bands the affected
+    docs eagerly at write time (:func:`_hot_transitions_plan` +
+    :func:`_hot_transition_rebands`), so by induction the band table
+    read back at batch b is already correct w.r.t. the hot set through
+    b − 1, which is exactly the set admission must use.
 
     Remaining per-batch corpus-sized work: the postings scan feeding
     the broadcast anti-join + the candidates-only verify (scans, no
-    shuffle), and ONE corpus-sized shuffle that both indexed modes
-    share — ``_read_latest_bands``' per-doc latest-version max over the
-    band table (O(docs × n_bands) NARROW rows, ~25× smaller than the
-    postings the fingerprint mode additionally shuffles). Its roll-up
-    is :func:`compact_admission_bands` — run between increments, it
+    shuffle), and ONE corpus-sized shuffle — ``_read_latest_bands``'
+    per-doc latest-version max over the band table (O(docs × n_bands)
+    NARROW rows). Its roll-up is :func:`compact_admission_bands`, which
     folds the versioned partitions into the base so this max resolves
-    over one version per doc — not a per-batch cost. No corpus-text
-    parse, no signature recompute.
-    Requires an integer df cap (hot-set monotonicity; validated at the
-    entry points).
+    over one version per doc. No corpus-text parse, no signature
+    recompute.
+
+    Bucket caps: drop mode anti-joins the oversized-bucket list away
+    (the r7 guard); salt mode (r12) salts the corpus rows and hands the
+    tail the bucket list so the batch side probes
+    ``min(n_salts, probe_salts)`` sub-buckets. Both pay the SAME one
+    corpus-band aggregate per batch (the oversized list) — salt adds
+    only O(batch·probe_salts) replication on the broadcast-small batch
+    side. Requires an integer df cap (hot-set monotonicity; validated at
+    the entry points).
     """
     from pyspark_ingestion_spark.operators.dedup import (
+        _drop_big_buckets,
         _lsh_admission_tail,
+        _oversized_bucket_salts,
+        _salt_corpus_bands,
         _shingle_table,
     )
+
+    if bucket_cap_mode not in ("drop", "salt"):
+        raise ValueError(
+            f"bucket_cap_mode must be 'drop' or 'salt', got {bucket_cap_mode!r}"
+        )
 
     posts = (
         _read_idx_parquet(spark, f"{index_path}/{_IDX_POSTINGS}")
@@ -1012,11 +880,15 @@ def _indexed_rejects_hotlog(
         hot = F.broadcast(_read_hot_log(spark, index_path, batch_id))
         capped_c = posts.join(hot, "shingle", "left_anti")
         sb = sb.join(hot, "shingle", "left_anti")
-    stored = _read_latest_bands(spark, f"{index_path}/{_IDX_BANDS}", batch_id)
-    bands_c, salt_probe = _corpus_bands_capped(
-        stored.filter(F.col("band") >= 0).select("doc", "band", "band_key"),
-        max_bucket_size, bucket_cap_mode, probe_salts,
-    )
+    band_rows = _read_latest_bands(
+        spark, f"{index_path}/{_IDX_BANDS}", batch_id
+    ).filter(F.col("band") >= 0).select("doc", "band", "band_key")
+    if bucket_cap_mode == "salt" and max_bucket_size is not None:
+        big_salts = _oversized_bucket_salts(band_rows, max_bucket_size)
+        bands_c = _salt_corpus_bands(band_rows, big_salts)
+        salt_probe = (big_salts, probe_salts)
+    else:
+        bands_c, salt_probe = _drop_big_buckets(band_rows, max_bucket_size), None
     rejects = _lsh_admission_tail(
         sb, capped_c, bands_c, id_col, num_hashes, band_size,
         threshold_num, threshold_den, broadcast_verify=True,
@@ -1108,39 +980,53 @@ def _admit_dedup_batch_indexed(
     band_size: int,
     threshold_num: int,
     threshold_den: int,
-    max_doc_freq: int | float | None,
+    max_doc_freq: int | None,
     max_bucket_size: int | None,
-    index_mode: str = "fingerprint",
     bucket_cap_mode: str = "drop",
     probe_salts: int = 4,
 ) -> None:
     """One micro-batch of indexed ``stream_dedup_admission``: admit via
-    :func:`_indexed_rejects` (or :func:`_indexed_rejects_hotlog` when
-    ``index_mode="hotlog"``), then append the batch's text, postings and
-    band rows — each to its own ``__batch_id`` partition under the
-    replay contract of :func:`_run_admission_sink` (calling twice with
-    the same ``batch_id`` reproduces, never erases). In hotlog mode the write side additionally maintains the df-count
-    deltas and the hot-transition log (same partition, same contract),
-    re-banding eagerly any docs a cap crossing invalidated — which is
-    what lets the NEXT batch's read path skip staleness detection.
-    Module-level for direct replay testability."""
+    :func:`_indexed_rejects_hotlog`, then append the batch's text,
+    postings, band rows, df-count delta and hot transitions — each to
+    its own ``__batch_id`` partition under the replay contract of
+    :func:`_run_admission_sink` (calling twice with the same
+    ``batch_id`` reproduces, never erases) — re-banding eagerly any docs
+    a cap crossing invalidated, which is what lets the NEXT batch's read
+    path skip staleness detection. Module-level for direct replay
+    testability."""
     from pyspark_ingestion_spark.operators.dedup import _shingle_table
 
-    _validate_index_mode(index_mode, max_doc_freq)
+    _check_index_cap(max_doc_freq)
     spark = batch_df.sparkSession
-    # the hotlog probe targets dfcnt, not hot: a base corpus with no
-    # shingle at the cap leaves the hot table legitimately EMPTY (no
-    # files at all), and probing it would re-bootstrap every batch.
-    # dfcnt is also written LAST in init_dedup_admission_index, so its
-    # base partition existing implies the whole bootstrap completed
-    probe = _IDX_DFCNT if index_mode == "hotlog" else _IDX_BANDS
-    # bootstrap once; the completion probe memoizes per process once
-    # True (r15, _has_base_partition)
-    if not _has_base_partition(spark, f"{index_path}/{probe}"):
+    # the probe targets dfcnt, not hot: a base corpus with no shingle at
+    # the cap leaves the hot table legitimately EMPTY (no files at all),
+    # and probing it would re-bootstrap every batch. dfcnt is also
+    # written LAST in init_dedup_admission_index, so its base partition
+    # existing implies the whole bootstrap completed. Bootstrap once;
+    # the probe memoizes per process once True (r15, _has_base_partition)
+    if not _has_base_partition(spark, f"{index_path}/{_IDX_DFCNT}"):
+        # batch partitions land only after a completed bootstrap, so an
+        # admitted batch here means the index lost (or, written by the
+        # retired fingerprint mode, never had) its df counts; a
+        # bootstrap would re-seed them from the base corpus alone and
+        # undercount every admitted doc. out_path is listed too: a
+        # compacted index keeps no batch partition of its own.
+        seen = [
+            b for p in (f"{index_path}/{_IDX_POSTINGS}", out_path)
+            for b in _list_child_ids(spark, p, "__batch_id=") if b >= 0
+        ]
+        if seen:
+            raise ValueError(
+                f"admission index {index_path} has no dfcnt table but "
+                f"admitted batches exist (ids {sorted(set(seen))[:3]}): it "
+                "was written by the retired fingerprint index mode or lost "
+                f"its df counts. Rebuild it: delete {index_path} and run "
+                "init_dedup_admission_index over the base corpus plus the "
+                f"documents admitted to {out_path}."
+            )
         init_dedup_admission_index(
             base_corpus, index_path, id_col=id_col, text_col=text_col, n=n,
             num_hashes=num_hashes, band_size=band_size, max_doc_freq=max_doc_freq,
-            index_mode=index_mode,
         )
 
     # materialize the incoming micro-batch ONCE (r14, guide §4): the
@@ -1153,22 +1039,11 @@ def _admit_dedup_batch_indexed(
     # ≈ the whole steady-state batch); for a real stream source it is a
     # redundant re-read. One eager checkpoint = one source evaluation.
     batch = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-    if index_mode == "hotlog":
-        rejects, sb = _indexed_rejects_hotlog(
-            spark, batch, index_path, batch_id, id_col, n, num_hashes, band_size,
-            threshold_num, threshold_den,
-            int(max_doc_freq) if max_doc_freq is not None else None,
-            max_bucket_size, text_col=text_col,
-            bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
-        )
-        stale_rows = None
-    else:
-        rejects, sb, stale_rows = _indexed_rejects(
-            spark, batch, index_path, batch_id, id_col, n, num_hashes, band_size,
-            threshold_num, threshold_den, max_doc_freq, max_bucket_size,
-            text_col=text_col,
-            bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
-        )
+    rejects, sb = _indexed_rejects_hotlog(
+        spark, batch, index_path, batch_id, id_col, n, num_hashes, band_size,
+        threshold_num, threshold_den, max_doc_freq, max_bucket_size,
+        text_col=text_col, bucket_cap_mode=bucket_cap_mode, probe_salts=probe_salts,
+    )
     # materialize once (batch-sized, EAGER): three writes derive from
     # it, the LogicalRDD plan keeps the text write from re-running the
     # LSH, and eager materialization makes the frame safe to consume
@@ -1189,27 +1064,20 @@ def _admit_dedup_batch_indexed(
     band_rows = _index_band_rows(
         sb.join(admitted_ids, "doc"), admitted_ids, num_hashes, band_size
     )
-    if stale_rows is not None:  # fingerprint mode's staleness re-bands
-        band_rows = band_rows.unionByName(stale_rows)
+    batch_cnt = adm_posts.groupBy("shingle").agg(F.count(F.lit(1)).alias("cnt"))
     newly_hot_plan = None
-    batch_cnt = None
-    if index_mode == "hotlog":
-        batch_cnt = adm_posts.groupBy("shingle").agg(
-            F.count(F.lit(1)).alias("cnt")
+    if max_doc_freq is not None:
+        # built BEFORE the dfcnt delta write is submitted — the plan
+        # excludes this batch's partition and pins its file listing
+        # to the pre-write directory state (no commit/listing race)
+        newly_hot_plan = _hot_transitions_plan(
+            spark, index_path, batch_id, batch_cnt, max_doc_freq
         )
-        if max_doc_freq is not None:
-            # built BEFORE the dfcnt delta write is submitted — the plan
-            # excludes this batch's partition and pins its file listing
-            # to the pre-write directory state (no commit/listing race)
-            newly_hot_plan = _hot_transitions_plan(
-                spark, index_path, batch_id, batch_cnt, int(max_doc_freq)
-            )
     bands_path = f"{index_path}/{_IDX_BANDS}"
     with _overlapped_writes(batch_id) as (submit, wait):
         submit("admitted-text", admitted, out_path)
         submit("postings", adm_posts, f"{index_path}/{_IDX_POSTINGS}")
-        if batch_cnt is not None:
-            submit("dfcnt-delta", batch_cnt, f"{index_path}/{_IDX_DFCNT}")
+        submit("dfcnt-delta", batch_cnt, f"{index_path}/{_IDX_DFCNT}")
         # optimistic fresh-band write: correct as-is unless a cap
         # crossing invalidates some docs' bands — the rare branch below
         # then overwrites the same partition with the replaced rows (a
@@ -1272,28 +1140,24 @@ def _read_idx_parquet(spark: SparkSession, path: str) -> DataFrame:
 _BOOTSTRAP_SEEN: set[str] = set()
 
 
-def _base_partition_exists(spark: SparkSession, path: str) -> bool:
+def _has_base_partition(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` has rows in its base (``__batch_id = -1``)
-    partition — the admission sinks' bootstrap completion probe, read
-    afresh on every call."""
+    partition — the admission sinks' bootstrap completion probe —
+    memoized per process once True (never memoized False: an incomplete
+    bootstrap must keep re-probing until init completes)."""
     from pyspark.errors import AnalysisException
 
-    try:
-        return bool(
-            _read_idx_parquet(spark, path)
-            .filter(F.col("__batch_id").cast("long") == -1)
-            .head(1)
-        )
-    except AnalysisException:
-        return False
-
-
-def _has_base_partition(spark: SparkSession, path: str) -> bool:
-    """:func:`_base_partition_exists`, memoized per process once True
-    (never memoized False: an incomplete bootstrap must keep
-    re-probing until init completes)."""
-    if path not in _BOOTSTRAP_SEEN and _base_partition_exists(spark, path):
-        _BOOTSTRAP_SEEN.add(path)
+    if path not in _BOOTSTRAP_SEEN:
+        try:
+            rows = (
+                _read_idx_parquet(spark, path)
+                .filter(F.col("__batch_id").cast("long") == -1)
+                .head(1)
+            )
+        except AnalysisException:
+            rows = []
+        if rows:
+            _BOOTSTRAP_SEEN.add(path)
     return path in _BOOTSTRAP_SEEN
 
 
@@ -1443,8 +1307,8 @@ def compact_admission_bands(
 
     This folds bands only; :func:`compact_admission_index` additionally
     folds postings (plain concat — committed partitions can never
-    replay, so the ledger folds under the same guard) and the hotlog
-    mode's dfcnt/hot tables.
+    replay, so the ledger folds under the same guard) and the dfcnt/hot
+    tables.
     """
 
     def merge(path: str, keep_ids: list[int]) -> DataFrame:
@@ -1469,15 +1333,15 @@ def compact_admission_index(
     """Compact every table of the admission index that grows a
     partition per batch: ``bands`` (latest-wins merge), ``postings``
     (plain concatenation — rows are disjoint across partitions since a
-    doc is admitted once), and — when the hotlog mode's tables exist —
-    ``dfcnt`` (per-shingle SUM merge: each partition holds a df-count
-    delta, so the fold is exact counter addition, and without it every
-    batch's :func:`_hot_transitions_plan` scans O(shingles × batches)
-    delta rows — a per-batch cost growing with stream LENGTH) and
-    ``hot`` (distinct-union merge). Same write-ahead staging protocol,
-    same ``checkpoint`` commit guard, same precondition as
-    :func:`compact_admission_bands` for each table. Returns table →
-    partitions removed.
+    doc is admitted once), ``dfcnt`` (per-shingle SUM merge: each
+    partition holds a df-count delta, so the fold is exact counter
+    addition, and without it every batch's :func:`_hot_transitions_plan`
+    scans O(shingles × batches) delta rows — a per-batch cost growing
+    with stream LENGTH) and ``hot`` (distinct-union merge). Same
+    write-ahead staging protocol, same ``checkpoint`` commit guard, same
+    precondition as :func:`compact_admission_bands` for each table; a
+    table with no batch partitions (or no files) folds to 0. Returns
+    table → partitions removed.
 
     Postings folding note (r7): round 6 kept postings append-only on
     the theory that batch ownership was their replay contract — but the
@@ -1494,17 +1358,14 @@ def compact_admission_index(
         )
     }
 
-    folds = [(_IDX_POSTINGS, _fold_concat(spark, "doc", "shingle"))]
-    if _list_child_ids(spark, f"{index_path}/{_IDX_DFCNT}", "__batch_id="):
-        folds += [
-            (_IDX_DFCNT, _fold_sum(spark, "shingle", "cnt")),
-            (
-                _IDX_HOT,
-                lambda path, ids: _kept_rows(spark, path, ids)
-                .select("shingle")
-                .distinct(),
-            ),
-        ]
+    folds = [
+        (_IDX_POSTINGS, _fold_concat(spark, "doc", "shingle")),
+        (_IDX_DFCNT, _fold_sum(spark, "shingle", "cnt")),
+        (
+            _IDX_HOT,
+            lambda path, ids: _kept_rows(spark, path, ids).select("shingle").distinct(),
+        ),
+    ]
     for table, fold in folds:
         removed[table] = _compact_versioned_table(
             spark, f"{index_path}/{table}", fold, checkpoint, on_uncommitted, mode
@@ -1832,9 +1693,9 @@ def _substring_hot_windows(
     semi-join — the ledger is scanned, never shuffled) is what keeps the
     aggregate batch-bounded; it is also lossless, because hotness only
     matters where a batch window can collide with a corpus one, i.e. on
-    the join keys the batch itself carries. Raises AnalysisException
-    when the ledger does not exist (legacy index) — callers fall back to
-    the corpus-wide aggregate."""
+    the join keys the batch itself carries. Raises AnalysisException,
+    naming the path, when the ledger does not exist: the sink's
+    bootstrap backfills a ledger-less index before any read."""
     bw = batch_windows.select("wh").distinct()
     dfc = (
         _read_idx_parquet(spark, f"{index_path}/{_IDX_WDFCNT}")
@@ -1899,12 +1760,9 @@ def _substring_rejects_indexed(
     candidate join keys on ``wh``, so a hash absent from ``wb`` can
     produce no candidate regardless of ``wc`` — dropping it from the
     corpus side too (what the recompute form does) is join-key-redundant
-    and would cost a second corpus-sized anti-join. A legacy index
-    without the ledger falls back to the pre-r8 corpus-wide aggregate.
-    Replay self-exclusion mirrors the LSH index: both reads drop the
-    current batch id's partition."""
-    from pyspark.errors import AnalysisException
-
+    and would cost a second corpus-sized anti-join. Replay
+    self-exclusion mirrors the LSH index: both reads drop the current
+    batch id's partition."""
     _validate_substring_params(k, min_len, sample_mod)
     wc = (
         _read_idx_parquet(spark, f"{index_path}/{_IDX_WINDOWS}")
@@ -1930,17 +1788,7 @@ def _substring_rejects_indexed(
     ).localCheckpoint(eager=False)
     wb = wb_raw
     if max_window_df is not None:
-        try:
-            hot = _substring_hot_windows(
-                spark, index_path, batch_id, wb_raw, max_window_df
-            )
-        except AnalysisException:  # legacy index without the ledger
-            hot = (
-                wc.groupBy("wh")
-                .agg(F.count_distinct("doc").alias("__df"))
-                .filter(F.col("__df") > max_window_df)
-                .select("wh")
-            )
+        hot = _substring_hot_windows(spark, index_path, batch_id, wb_raw, max_window_df)
         wb = wb.join(F.broadcast(hot), "wh", "left_anti")
     # the candidate join BROADCASTS the batch windows explicitly: the
     # corpus-sized windows index must only ever be the streamed/scanned
@@ -2001,17 +1849,14 @@ def _admit_substring_batch_indexed(
     :func:`_run_admission_sink`. Module-level for direct replay
     testability."""
     spark = batch_df.sparkSession
-    # bootstrap probe, read EVERY batch (unlike the other sinks' memoized
-    # _has_base_partition): it doubles as the LEGACY-INDEX detector — a
-    # ledger deleted out-of-band must be re-detected on the NEXT batch so
-    # the backfill arm runs (pinned by test_substring_dfcnt_ledger_plan_
-    # parity_and_backfill). The probe targets the LEDGER (written last by
-    # init) so a crash inside the bootstrap window re-runs it; a windows
-    # base WITHOUT a ledger base is a pre-ledger index (or that same
-    # crash) and gets the O(index) one-time backfill instead of a full
-    # re-bootstrap.
-    if not _base_partition_exists(spark, f"{index_path}/{_IDX_WDFCNT}"):
-        if _base_partition_exists(spark, f"{index_path}/{_IDX_WINDOWS}"):
+    # bootstrap once; the completion probe memoizes per process once
+    # True (r15, _has_base_partition). It targets the LEDGER (written
+    # last by init) so a crash inside the bootstrap window re-runs it; a
+    # windows base WITHOUT a ledger base is a pre-ledger index (or that
+    # same crash) and gets the O(index) one-time backfill instead of a
+    # full re-bootstrap.
+    if not _has_base_partition(spark, f"{index_path}/{_IDX_WDFCNT}"):
+        if _has_base_partition(spark, f"{index_path}/{_IDX_WINDOWS}"):
             backfill_substring_dfcnt(spark, index_path)
         else:
             init_substring_admission_index(
@@ -2130,16 +1975,17 @@ def compact_substring_index(
     """Fold the substring admission index's per-batch partitions:
     ``windows`` by plain concatenation (rows are disjoint across
     partitions: a doc is admitted once and the index is append-only, so
-    every merge level is order-free) and — when the ledger exists — the
-    ``dfcnt`` window-df deltas by exact per-hash counter SUM (the same
-    associativity argument as ``compact_admission_index``'s dfcnt fold;
-    without it the per-batch hot lookup scans O(batches) small delta
-    files). Same write-ahead staging, commit guard (with the retention
-    floor) and LSM minor/major tiers as :func:`compact_admission_index`;
-    returns table → partitions removed."""
-    folds = [(_IDX_WINDOWS, _fold_concat(spark, "doc", "pos", "wh", "w"))]
-    if _list_child_ids(spark, f"{index_path}/{_IDX_WDFCNT}", "__batch_id="):
-        folds.append((_IDX_WDFCNT, _fold_sum(spark, "wh", "cnt")))
+    every merge level is order-free) and the ``dfcnt`` window-df deltas
+    by exact per-hash counter SUM (the same associativity argument as
+    ``compact_admission_index``'s dfcnt fold; without it the per-batch
+    hot lookup scans O(batches) small delta files). Same write-ahead
+    staging, commit guard (with the retention floor) and LSM minor/major
+    tiers as :func:`compact_admission_index`; returns table → partitions
+    removed (0 for a table with no batch partitions)."""
+    folds = [
+        (_IDX_WINDOWS, _fold_concat(spark, "doc", "pos", "wh", "w")),
+        (_IDX_WDFCNT, _fold_sum(spark, "wh", "cnt")),
+    ]
     return {
         table: _compact_versioned_table(
             spark, f"{index_path}/{table}", fold, checkpoint, on_uncommitted, mode

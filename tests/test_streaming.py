@@ -386,17 +386,17 @@ def _mk_admission_files(spark, tmp_path, src, files, schema="doc_id int, text st
         time.sleep(1.1)
 
 
-@pytest.mark.parametrize("index_mode", ["fingerprint", "hotlog"])
+@pytest.mark.parametrize("index_mode", ["hotlog"])
 def test_stream_dedup_admission_indexed_matches_recompute(
     spark, tmp_path, index_mode
 ):
-    """The incremental-band-table form — in BOTH maintenance modes:
-    fingerprint (per-batch staleness detection) and hotlog (df-delta +
-    hot-transition log, zero corpus-wide read-path aggregates; the
-    crossing batch re-bands eagerly) — admits EXACTLY the docs the
-    recompute form admits on the same micro-batches — including across a
-    df-cap transition (a boilerplate shingle crossing max_doc_freq
-    mid-stream forces re-banding of already-indexed corpus docs), and
+    """The incremental-band-table form (df-delta + hot-transition log,
+    zero corpus-wide read-path aggregates; the crossing batch re-bands
+    eagerly), reached through the entry point's ``index_mode`` keyword,
+    admits EXACTLY the docs the recompute form admits on the same
+    micro-batches — including across a df-cap transition (a boilerplate
+    shingle crossing max_doc_freq mid-stream forces re-banding of
+    already-indexed corpus docs), and
     across a checkpoint restart. Also proves re-banding actually
     happened (the index holds a newer band version for a base doc)."""
     from pyspark_ingestion_spark.operators.dedup import (
@@ -495,20 +495,16 @@ def test_stream_dedup_admission_indexed_matches_recompute(
     assert {d for _, d in got_i3} - {d for _, d in got_i} == {15}  # 14 rejected vs 13
 
 
-@pytest.mark.parametrize("index_mode", ["fingerprint", "hotlog"])
-def test_indexed_admission_replay_and_corpus_text_free_plan(
-    spark, tmp_path, index_mode
-):
+def test_indexed_admission_replay_and_corpus_text_free_plan(spark, tmp_path):
     """(1) Replaying a micro-batch through _admit_dedup_batch_indexed
     reproduces (never erases) the first attempt across every index
-    table (incl. hotlog's dfcnt/hot log); (2) the per-batch admission
+    table (incl. the dfcnt/hot log); (2) the per-batch admission
     plan reads ONLY the index and the batch — the corpus text (out_path
     or the base corpus's source) appears nowhere in it. This is the
     100 TB property the indexed form exists for: per-batch work is
     O(batch + index read-back), never O(corpus re-shingle)."""
     from pyspark_ingestion_spark.streaming.pipeline import (
         _admit_dedup_batch_indexed,
-        _indexed_rejects,
         _indexed_rejects_hotlog,
     )
 
@@ -530,12 +526,9 @@ def test_indexed_admission_replay_and_corpus_text_free_plan(
          (11, "one two three four five six seven eight")],
         "doc_id int, text string",
     )
-    _admit_dedup_batch_indexed(b0, 0, base, out, index, index_mode=index_mode,
-                               **kwargs)
+    _admit_dedup_batch_indexed(b0, 0, base, out, index, **kwargs)
 
-    tables = ["postings", "bands"] + (
-        ["dfcnt", "hot"] if index_mode == "hotlog" else []
-    )
+    tables = ["postings", "bands", "dfcnt", "hot"]
 
     def snap():
         out_rows = {tuple(r) for r in spark.read.parquet(out).collect()}
@@ -553,8 +546,7 @@ def test_indexed_admission_replay_and_corpus_text_free_plan(
 
     first = snap()
     assert {r[0] for r in first[0]} == {11}
-    _admit_dedup_batch_indexed(b0, 0, base, out, index, index_mode=index_mode,
-                               **kwargs)  # replay
+    _admit_dedup_batch_indexed(b0, 0, base, out, index, **kwargs)  # replay
     assert snap() == first
 
     # plan property: batch 1's rejects plan scans index + batch only
@@ -562,16 +554,10 @@ def test_indexed_admission_replay_and_corpus_text_free_plan(
         [(12, "nine ten eleven twelve thirteen fourteen fifteen sixteen")],
         "doc_id int, text string",
     )
-    if index_mode == "hotlog":
-        rejects, _sb = _indexed_rejects_hotlog(
-            spark, b1.select("doc_id", "text"), index, 1,
-            "doc_id", 3, 8, 2, 1, 2, 2, None,
-        )
-    else:
-        rejects, _sb, _stale = _indexed_rejects(
-            spark, b1.select("doc_id", "text"), index, 1,
-            "doc_id", 3, 8, 2, 1, 2, 2, None,
-        )
+    rejects, _sb = _indexed_rejects_hotlog(
+        spark, b1.select("doc_id", "text"), index, 1,
+        "doc_id", 3, 8, 2, 1, 2, 2, None,
+    )
     # inputFiles = every file any scan in the plan would read
     files = rejects.inputFiles()
     assert files, "expected index scans in the plan"
@@ -582,29 +568,48 @@ def test_indexed_admission_replay_and_corpus_text_free_plan(
 
 
 def test_hotlog_mode_rejects_fractional_cap(spark, tmp_path):
-    """hotlog correctness rests on hot-set monotonicity, which a
+    """The index's correctness rests on hot-set monotonicity, which a
     fractional df cap breaks (the threshold count moves with corpus
-    size) — the entry points must fail fast, not silently mis-admit."""
+    size): every entry point that is given an index path must fail fast
+    and point at the recompute form, not silently mis-admit. The retired
+    fingerprint index mode is refused by name, and the recompute form
+    (no index path) still admits under a fractional cap."""
     from pyspark_ingestion_spark.streaming.pipeline import (
         _admit_dedup_batch_indexed,
-        _validate_index_mode,
+        init_dedup_admission_index,
+        stream_dedup_admission,
     )
 
-    with pytest.raises(ValueError, match="INTEGER max_doc_freq"):
-        _validate_index_mode("hotlog", 0.5)
-    _validate_index_mode("hotlog", 25)     # int: fine
-    _validate_index_mode("hotlog", None)   # uncapped: fine
-    with pytest.raises(ValueError, match="index_mode"):
-        _validate_index_mode("bogus", 25)
     base = spark.createDataFrame([(0, "a b c d e f")], "doc_id int, text string")
     b = spark.createDataFrame([(1, "g h i j k l")], "doc_id int, text string")
+    out, idx = str(tmp_path / "o"), str(tmp_path / "i")
+    lsh = dict(n=3, num_hashes=8, band_size=2, threshold_num=1, threshold_den=2)
+    with pytest.raises(ValueError, match="INTEGER max_doc_freq.*index_path=None"):
+        stream_dedup_admission(
+            b, base, out, str(tmp_path / "c"), index_path=idx, max_doc_freq=0.5
+        )
+    with pytest.raises(ValueError, match="INTEGER max_doc_freq"):
+        init_dedup_admission_index(base, idx, max_doc_freq=0.5)
     with pytest.raises(ValueError, match="INTEGER max_doc_freq"):
         _admit_dedup_batch_indexed(
-            b, 0, base, str(tmp_path / "o"), str(tmp_path / "i"),
-            id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
-            threshold_num=1, threshold_den=2, max_doc_freq=0.5,
-            max_bucket_size=None, index_mode="hotlog",
+            b, 0, base, out, idx, id_col="doc_id", text_col="text",
+            max_doc_freq=0.5, max_bucket_size=None, **lsh,
         )
+    with pytest.raises(ValueError, match="fingerprint index mode was retired"):
+        stream_dedup_admission(
+            b, base, out, str(tmp_path / "c"), index_path=idx,
+            index_mode="fingerprint",
+        )
+    assert not os.path.exists(out) and not os.path.exists(idx)
+
+    # recompute form: the fractional cap is accepted and the stream admits
+    src = str(tmp_path / "src")
+    _mk_admission_files(spark, tmp_path, src, [("a", [(1, "g h i j k l")])])
+    stream = spark.readStream.schema("doc_id int, text string").parquet(src)
+    stream_dedup_admission(
+        stream, base, out, str(tmp_path / "ckpt"), max_doc_freq=0.5, **lsh
+    )
+    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1}
 
 
 def test_stream_token_cms_matches_batch_and_replays(spark, tmp_path):
@@ -713,14 +718,14 @@ def test_hotlog_bootstrap_crash_window_rerolls(spark, tmp_path):
     )
     kwargs = dict(id_col="doc_id", text_col="text", n=3, num_hashes=8,
                   band_size=2, threshold_num=1, threshold_den=2,
-                  max_doc_freq=2, max_bucket_size=None, index_mode="hotlog")
+                  max_doc_freq=2, max_bucket_size=None)
 
     from pyspark_ingestion_spark.streaming.pipeline import (
         init_dedup_admission_index,
     )
 
     init_kwargs = dict(id_col="doc_id", text_col="text", n=3, num_hashes=8,
-                       band_size=2, max_doc_freq=2, index_mode="hotlog")
+                       band_size=2, max_doc_freq=2)
 
     out_a, idx_a = str(tmp_path / "out_a"), str(tmp_path / "idx_a")
     _admit_dedup_batch_indexed(b0, 0, base, out_a, idx_a, **kwargs)
@@ -739,6 +744,60 @@ def test_hotlog_bootstrap_crash_window_rerolls(spark, tmp_path):
     assert df.filter(F.col("__batch_id").cast("long") == -1).head(1)
     got = {r["doc_id"] for r in spark.read.parquet(out_b).collect()}
     assert got == clean, (got, clean)
+
+
+def test_dedup_index_without_dfcnt_refuses_bootstrap(spark, tmp_path):
+    """An index that already holds admitted batches but has no dfcnt
+    table (the layout the retired fingerprint index mode wrote:
+    postings and bands partitions -1 and 0, no dfcnt or hot) must not be
+    bootstrapped again — that would re-seed the df counts from the base
+    corpus alone and undercount every admitted doc. The next batch of a
+    new process raises, naming the index, and writes nothing; so does a
+    compacted copy of that index, whose only trace of batch 0 is the
+    out_path partition."""
+    import shutil
+
+    from pyspark_ingestion_spark.streaming.pipeline import (
+        _BOOTSTRAP_SEEN,
+        _admit_dedup_batch_indexed,
+        compact_admission_index,
+    )
+
+    base = spark.createDataFrame(
+        [(0, "one two three four five six seven"),
+         (1, "eight nine ten eleven twelve thirteen")],
+        "doc_id int, text string",
+    )
+    b0 = spark.createDataFrame(
+        [(10, "fourteen fifteen sixteen seventeen eighteen")],
+        "doc_id int, text string",
+    )
+    b1 = spark.createDataFrame(
+        [(20, "nineteen twenty twentyone twentytwo twentythree")],
+        "doc_id int, text string",
+    )
+    kwargs = dict(id_col="doc_id", text_col="text", n=3, num_hashes=8,
+                  band_size=2, threshold_num=1, threshold_den=2,
+                  max_doc_freq=2, max_bucket_size=None)
+    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+    _admit_dedup_batch_indexed(b0, 0, base, out, idx, **kwargs)
+    for t in ("dfcnt", "hot"):
+        shutil.rmtree(f"{idx}/{t}", ignore_errors=True)
+    for t in ("postings", "bands"):
+        assert {p for p in os.listdir(f"{idx}/{t}") if p.startswith("__")} == {
+            "__batch_id=-1", "__batch_id=0"
+        }
+
+    for compacted in (False, True):
+        if compacted:
+            compact_admission_index(spark, idx)
+            assert not os.path.exists(f"{idx}/postings/__batch_id=0")
+        _BOOTSTRAP_SEEN.clear()  # a new process: the probe reads afresh
+        with pytest.raises(ValueError, match="no dfcnt table") as err:
+            _admit_dedup_batch_indexed(b1, 1, base, out, idx, **kwargs)
+        assert idx in str(err.value)
+        assert not os.path.exists(f"{out}/__batch_id=1")
+        assert not os.path.exists(f"{idx}/dfcnt")
 
 
 def test_compact_admission_bands_preserves_admissions(spark, tmp_path):
@@ -912,7 +971,7 @@ def test_compact_admission_index_hotlog_tables(spark, tmp_path):
     )
     kwargs = dict(id_col="doc_id", text_col="text", n=3, num_hashes=8,
                   band_size=2, threshold_num=1, threshold_den=2,
-                  max_doc_freq=2, max_bucket_size=None, index_mode="hotlog")
+                  max_doc_freq=2, max_bucket_size=None)
 
     paths = {}
     for arm in ("plain", "compacted"):
@@ -1012,7 +1071,7 @@ def test_compact_versioned_table_aborts_on_mid_merge_landing(spark, tmp_path):
     assert {int(r["__batch_id"]) for r in rows} == {-1}
 
 
-@pytest.mark.parametrize("index_mode", ["fingerprint", "hotlog"])
+@pytest.mark.parametrize("index_mode", ["hotlog"])
 def test_in_sink_auto_compaction_matches_recompute(spark, tmp_path, index_mode):
     """compact_every fires compact_admission_index MID-STREAM — inside
     the sink, between micro-batches, with no maintenance window — and
@@ -1086,9 +1145,7 @@ def test_in_sink_auto_compaction_matches_recompute(spark, tmp_path, index_mode):
     assert 12 in {d for _, d in admitted(out_i)}  # the cap transition mattered
 
     # the batch-1 compaction really folded batch 0: only {-1, 1} survive
-    tables = ["bands", "postings"] + (
-        ["dfcnt", "hot"] if index_mode == "hotlog" else []
-    )
+    tables = ["bands", "postings", "dfcnt", "hot"]
     for t in tables:
         parts = {
             int(r["__batch_id"])
@@ -1107,25 +1164,22 @@ def test_in_sink_auto_compaction_matches_recompute(spark, tmp_path, index_mode):
         bands = frozenset(
             tuple(r) for r in _read_latest_bands(spark, f"{index}/bands", -2).collect()
         )
-        extras = []
-        if index_mode == "hotlog":
-            extras.append(frozenset(
+        extras = (
+            frozenset(
                 (r["shingle"], r["total"])
                 for r in spark.read.parquet(f"{index}/dfcnt")
                 .groupBy("shingle").agg(F.sum("cnt").alias("total")).collect()
-            ))
-            extras.append(frozenset(
+            ),
+            frozenset(
                 r["shingle"] for r in spark.read.parquet(f"{index}/hot")
                 .select("shingle").distinct().collect()
-            ))
-        return (admitted(out_i), bands, tuple(extras))
-
-    if index_mode == "hotlog":
-        n_posts = spark.read.parquet(f"{index}/postings").count()
-        n_hot = (
-            spark.read.parquet(f"{index}/hot").select("shingle").distinct().count()
+            ),
         )
-        assert n_hot * kwargs["max_doc_freq"] < n_posts, (n_hot, n_posts)
+        return (admitted(out_i), bands, extras)
+
+    n_posts = spark.read.parquet(f"{index}/postings").count()
+    n_hot = spark.read.parquet(f"{index}/hot").select("shingle").distinct().count()
+    assert n_hot * kwargs["max_doc_freq"] < n_posts, (n_hot, n_posts)
 
     # REPLAY of the last (compaction) batch: rebuild the exact restart
     # state — batch 2's partitions on disk, its commit marker absent —
@@ -1152,7 +1206,7 @@ def test_in_sink_auto_compaction_matches_recompute(spark, tmp_path, index_mode):
     batch = spark.createDataFrame(file_c, "doc_id int, text string")
     _admit_dedup_batch_indexed(
         batch, last, base_corpus, out_i, index, id_col="doc_id",
-        text_col="text", index_mode=index_mode, **kwargs
+        text_col="text", **kwargs
     )
     assert effective_state() == want
 
@@ -1712,9 +1766,10 @@ def test_substring_dfcnt_ledger_plan_parity_and_backfill(spark, tmp_path):
     property itself: the hot computation's scans are dfcnt-only (the
     windows table feeds only the candidate join), broadcast-restricted
     to the batch's hashes, and the full rejects plan reads no text path
-    and contains no distinct-count aggregate; (4) a legacy index (ledger
-    deleted) still admits identically via the fallback arm, and the next
-    admit backfills the ledger per-partition."""
+    and contains no distinct-count aggregate; (4) a ledger deleted
+    mid-process makes the read fail loudly (there is no ledger-less read
+    arm), and after a restart the next admit backfills the ledger
+    per-partition."""
     import shutil
 
     from pyspark_ingestion_spark.operators.dedup import (
@@ -1853,14 +1908,20 @@ def test_substring_dfcnt_ledger_plan_parity_and_backfill(spark, tmp_path):
     finally:
         spark.conf.set(bloom_key, prev_bloom)
 
-    # legacy index: ledger gone → fallback arm admits identically …
+    # ledger gone mid-process: the memoized probe does not look again,
+    # so the read fails loudly, naming the missing path …
+    from pyspark.errors import AnalysisException
+
+    from pyspark_ingestion_spark.streaming.pipeline import _BOOTSTRAP_SEEN
+
     shutil.rmtree(f"{index}/dfcnt")
-    fb, _ = _substring_rejects_indexed(
-        spark, probe, index, 99, "doc_id", "text", 10, 10, 2, None
-    )
-    assert {r["doc_id"] for r in fb.collect()} == {21, 22}
-    assert "count(distinct" in formatted_plan(fb).lower()  # the old arm
-    # … and the next admit backfills the ledger partition-per-partition
+    with pytest.raises(AnalysisException, match="dfcnt"):
+        _substring_rejects_indexed(
+            spark, probe, index, 99, "doc_id", "text", 10, 10, 2, None
+        )
+    # … and after a restart (probe memo cleared) the next admit backfills
+    # the ledger partition-per-partition
+    _BOOTSTRAP_SEEN.clear()
     df3 = spark.createDataFrame(
         [(30, "yet another run of fresh text matching nothing")],
         "doc_id int, text string",
@@ -1905,7 +1966,7 @@ def test_minor_compaction_segments_and_major_collapse(spark, tmp_path):
     out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
     kwargs = dict(id_col="doc_id", text_col="text", n=3, num_hashes=8,
                   band_size=2, threshold_num=1, threshold_den=2,
-                  max_doc_freq=2, max_bucket_size=None, index_mode="hotlog")
+                  max_doc_freq=2, max_bucket_size=None)
     texts = [
         "one two three four five six the big boiler plate text",
         "eight nine ten eleven twelve thirteen the big boiler plate text",
@@ -2637,7 +2698,7 @@ def test_sink_rejects_executed_shuffle_stages(spark, tmp_path):
     hb = spark.read.parquet(f"{tmp}/hbase")
     kw = dict(id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
               threshold_num=1, threshold_den=2, max_doc_freq=25,
-              max_bucket_size=None, index_mode="hotlog")
+              max_bucket_size=None)
     b0 = spark.createDataFrame(
         rows(40, 100, 10_000), "doc_id long, text string"
     ).coalesce(2)
@@ -2702,13 +2763,13 @@ def test_sink_rejects_executed_shuffle_stages(spark, tmp_path):
 
 
 def test_indexed_salted_admission_matches_recompute(spark, tmp_path):
-    """r12: bucket_cap_mode='salt' threads through BOTH indexed LSH
-    read paths (fingerprint + hotlog) and matches the recompute form
+    """r12: bucket_cap_mode='salt' threads through the indexed LSH
+    read path and matches the recompute form
     (`incremental_lsh_rejects`) on a planted popular cluster — the
     indexed band table holds exactly the recompute form's rows, so the
     oversized-bucket lists, the per-doc salts and the probed sub-bucket
-    sets agree. Drop mode misses the planted near-dups on every face;
-    salt mode recovers them on every face."""
+    sets agree. Drop mode misses the planted near-dups on both faces;
+    salt mode recovers them on both faces."""
     import pytest
 
     from pyspark_ingestion_spark.operators.dedup import (
@@ -2717,7 +2778,6 @@ def test_indexed_salted_admission_matches_recompute(spark, tmp_path):
     )
     from pyspark_ingestion_spark.streaming.pipeline import (
         _admit_dedup_batch_indexed,
-        _indexed_rejects,
         _indexed_rejects_hotlog,
     )
 
@@ -2745,41 +2805,36 @@ def test_indexed_salted_admission_matches_recompute(spark, tmp_path):
             ).collect()
         }
 
-    for index_mode, helper in (
-        ("fingerprint", _indexed_rejects),
-        ("hotlog", _indexed_rejects_hotlog),
+    root = str(tmp_path / "hotlog")
+    # batch 0 bootstraps the index from the base corpus; we then
+    # read batch 1's rejects directly off the read-path helper
+    b0 = spark.createDataFrame(
+        [(5000, "warmup words one two three four five six seven")],
+        "doc_id long, text string",
+    )
+    _admit_dedup_batch_indexed(
+        b0, 0, corpus, f"{root}/out", f"{root}/idx",
+        id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
+        threshold_num=1, threshold_den=2, max_doc_freq=None,
+        max_bucket_size=None,
+    )
+    release_shingle_caches()
+
+    def indexed(**kw):
+        rej, _sb = _indexed_rejects_hotlog(
+            spark, batch, f"{root}/idx", 1, "doc_id", *args,
+            max_doc_freq=None, **kw
+        )
+        return {r["doc_id"] for r in rej.collect()}
+
+    for kw in (
+        dict(max_bucket_size=None),
+        dict(max_bucket_size=4),
+        dict(max_bucket_size=4, bucket_cap_mode="salt"),
     ):
-        root = str(tmp_path / index_mode)
-        # batch 0 bootstraps the index from the base corpus; we then
-        # read batch 1's rejects directly off the read-path helpers
-        b0 = spark.createDataFrame(
-            [(5000, "warmup words one two three four five six seven")],
-            "doc_id long, text string",
-        )
-        _admit_dedup_batch_indexed(
-            b0, 0, corpus, f"{root}/out", f"{root}/idx",
-            id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
-            threshold_num=1, threshold_den=2, max_doc_freq=None,
-            max_bucket_size=None, index_mode=index_mode,
-        )
-        release_shingle_caches()
-
-        def indexed(**kw):
-            out = helper(
-                spark, batch, f"{root}/idx", 1, "doc_id", *args,
-                max_doc_freq=None, **kw
-            )
-            rej = out[0] if isinstance(out, tuple) else out
-            return {r["doc_id"] for r in rej.collect()}
-
-        for kw in (
-            dict(max_bucket_size=None),
-            dict(max_bucket_size=4),
-            dict(max_bucket_size=4, bucket_cap_mode="salt"),
-        ):
-            assert indexed(**kw) == recompute(**kw), (index_mode, kw)
-        assert indexed(max_bucket_size=4) == set()
-        assert indexed(max_bucket_size=4, bucket_cap_mode="salt") == {1000}
+        assert indexed(**kw) == recompute(**kw), kw
+    assert indexed(max_bucket_size=4) == set()
+    assert indexed(max_bucket_size=4, bucket_cap_mode="salt") == {1000}
 
     with pytest.raises(ValueError, match="bucket_cap_mode"):
         _indexed_rejects_hotlog(
@@ -3451,7 +3506,7 @@ def test_admission_sink_single_source_evaluation(spark, tmp_path, admit):
             bdf, 0, base, out, idx,
             id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
             threshold_num=1, threshold_den=2, max_doc_freq=5,
-            max_bucket_size=None, index_mode="hotlog",
+            max_bucket_size=None,
         )
     elif admit == "substring_indexed":
         _admit_substring_batch_indexed(
@@ -3551,7 +3606,7 @@ def test_overlapped_write_failure_replays_clean(spark, tmp_path, monkeypatch, si
                     bdf, bid, base, f"{root}/out", f"{root}/idx",
                     id_col="doc_id", text_col="text", n=3, num_hashes=8,
                     band_size=2, threshold_num=1, threshold_den=2,
-                    max_doc_freq=4, max_bucket_size=None, index_mode="hotlog",
+                    max_doc_freq=4, max_bucket_size=None,
                 )
 
             tables = {"admitted-text": "out", "postings": "idx/postings",
