@@ -63,17 +63,6 @@ def token_count(text: Column | str) -> Column:
     return F.regexp_count(_c(text), F.lit(TOKEN_PATTERN)).cast("long")
 
 
-def char_stats(text: Column | str) -> list[Column]:
-    """n_chars / n_letters / n_digits / n_spaces — building blocks for quality scores."""
-    t = _c(text)
-    return [
-        F.length(t).cast("long").alias("n_chars"),
-        F.regexp_count(t, F.lit(r"[A-Za-z]")).cast("long").alias("n_letters"),
-        F.regexp_count(t, F.lit(r"[0-9]")).cast("long").alias("n_digits"),
-        F.regexp_count(t, F.lit(r"\s")).cast("long").alias("n_spaces"),
-    ]
-
-
 def quality_score(text: Column | str) -> Column:
     """Heuristic quality in [0,1]: letter density × length factor.
 

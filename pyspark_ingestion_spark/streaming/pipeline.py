@@ -761,6 +761,7 @@ def init_dedup_admission_index(
     )
     _write_batch_partition(base_hot, f"{index_path}/{_IDX_HOT}", -1)
     _write_batch_partition(cnt, f"{index_path}/{_IDX_DFCNT}", -1)
+    _BOOTSTRAP_SEEN.add(f"{index_path}/{_IDX_DFCNT}")
 
 
 def _check_index_cap(max_doc_freq: int | float | None) -> None:
@@ -1003,7 +1004,8 @@ def _admit_dedup_batch_indexed(
     # and probing it would re-bootstrap every batch. dfcnt is also
     # written LAST in init_dedup_admission_index, so its base partition
     # existing implies the whole bootstrap completed. Bootstrap once;
-    # the probe memoizes per process once True (r15, _has_base_partition)
+    # the probe memoizes per process once True or once init returns
+    # (_has_base_partition)
     if not _has_base_partition(spark, f"{index_path}/{_IDX_DFCNT}"):
         # batch partitions land only after a completed bootstrap, so an
         # admitted batch here means the index lost (or, written by the
@@ -1131,20 +1133,23 @@ def _read_idx_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-#: index paths whose bootstrap completion probe has read True once this
-#: process (r15, metadata only): an index never becomes un-bootstrapped
-#: within a process — init is idempotent, compaction preserves the base
-#: partition — and the probe's crash-recovery contract is per-PROCESS
-#: (a crash restarts the process and re-probes), so once True the
-#: per-batch probe read + head(1) job (~0.15 s) carries no information.
+#: index paths whose bootstrap is known complete this process (r15,
+#: metadata only): the completion probe read True once, or the index's
+#: ``init_*`` (or the substring ledger backfill) returned after its last
+#: write. An index never becomes un-bootstrapped within a process — init
+#: is idempotent, compaction preserves the base partition — and the
+#: probe's crash-recovery contract is per-PROCESS (a crash restarts the
+#: process and re-probes), so once known the per-batch probe read +
+#: head(1) job (~0.15 s) carries no information.
 _BOOTSTRAP_SEEN: set[str] = set()
 
 
 def _has_base_partition(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` has rows in its base (``__batch_id = -1``)
     partition — the admission sinks' bootstrap completion probe —
-    memoized per process once True (never memoized False: an incomplete
-    bootstrap must keep re-probing until init completes)."""
+    memoized per process once True or once init has returned (never
+    memoized False: an incomplete bootstrap must keep re-probing until
+    init completes)."""
     from pyspark.errors import AnalysisException
 
     if path not in _BOOTSTRAP_SEEN:
@@ -1655,6 +1660,7 @@ def init_substring_admission_index(
     )
     cnt = stored.groupBy("wh").agg(F.count_distinct("doc").alias("cnt"))
     _write_batch_partition(cnt, f"{index_path}/{_IDX_WDFCNT}", -1)
+    _BOOTSTRAP_SEEN.add(f"{index_path}/{_IDX_WDFCNT}")
 
 
 def backfill_substring_dfcnt(spark: SparkSession, index_path: str) -> int:
@@ -1677,6 +1683,7 @@ def backfill_substring_dfcnt(spark: SparkSession, index_path: str) -> int:
         .select("wh", "cnt", "__batch_id")
     )
     overwrite_partitions(cnt, f"{index_path}/{_IDX_WDFCNT}", ["__batch_id"])
+    _BOOTSTRAP_SEEN.add(f"{index_path}/{_IDX_WDFCNT}")
     return len(ids)
 
 
@@ -1850,11 +1857,11 @@ def _admit_substring_batch_indexed(
     testability."""
     spark = batch_df.sparkSession
     # bootstrap once; the completion probe memoizes per process once
-    # True (r15, _has_base_partition). It targets the LEDGER (written
-    # last by init) so a crash inside the bootstrap window re-runs it; a
-    # windows base WITHOUT a ledger base is a pre-ledger index (or that
-    # same crash) and gets the O(index) one-time backfill instead of a
-    # full re-bootstrap.
+    # True or once init returns (_has_base_partition). It targets the
+    # LEDGER (written last by init) so a crash inside the bootstrap
+    # window re-runs it; a windows base WITHOUT a ledger base is a
+    # pre-ledger index (or that same crash) and gets the O(index)
+    # one-time backfill instead of a full re-bootstrap.
     if not _has_base_partition(spark, f"{index_path}/{_IDX_WDFCNT}"):
         if _has_base_partition(spark, f"{index_path}/{_IDX_WINDOWS}"):
             backfill_substring_dfcnt(spark, index_path)
@@ -2094,6 +2101,7 @@ def init_semantic_admission_index(
         ).write.mode("overwrite").parquet(f"{index_path}/{_IDX_CENTROIDS}")
     rows = _bucket_rows(base_corpus, id_col, vec_col, n_dims, rows_c)
     _write_batch_partition(rows, f"{index_path}/{_IDX_BUCKETS}", -1)
+    _BOOTSTRAP_SEEN.add(f"{index_path}/{_IDX_BUCKETS}")
 
 
 def _semantic_rejects_indexed(
@@ -2249,7 +2257,7 @@ def _admit_semantic_batch_indexed(
     the index."""
     spark = batch_df.sparkSession
     # bootstrap once; the completion probe memoizes per process once
-    # True (r15, _has_base_partition)
+    # True or once init returns (_has_base_partition)
     if not _has_base_partition(spark, f"{index_path}/{_IDX_BUCKETS}"):
         init_semantic_admission_index(
             base_corpus, index_path, id_col=id_col, vec_col=vec_col,
@@ -2445,6 +2453,7 @@ def init_fingerprint_admission_index(
     fingerprint rows (doc, hi, lo) into ``__batch_id=-1`` — the only
     time the indexed path ever decodes base payloads. Idempotent."""
     _write_batch_partition(base_fp, f"{index_path}/{_IDX_FPRINTS}", -1)
+    _BOOTSTRAP_SEEN.add(f"{index_path}/{_IDX_FPRINTS}")
 
 
 def _fingerprint_rejects_indexed(
@@ -2510,7 +2519,7 @@ def _admit_fingerprint_batch_indexed(
     :func:`_run_admission_sink`. Module-level for replay testability."""
     spark = batch_df.sparkSession
     # bootstrap once; the completion probe memoizes per process once
-    # True (r15, _has_base_partition)
+    # True or once init returns (_has_base_partition)
     if not _has_base_partition(spark, f"{index_path}/{_IDX_FPRINTS}"):
         init_fingerprint_admission_index(
             _hash_rows(hash_fn, base_media, hash_cols, id_col), index_path

@@ -721,6 +721,7 @@ def test_hotlog_bootstrap_crash_window_rerolls(spark, tmp_path):
                   max_doc_freq=2, max_bucket_size=None)
 
     from pyspark_ingestion_spark.streaming.pipeline import (
+        _BOOTSTRAP_SEEN,
         init_dedup_admission_index,
     )
 
@@ -736,6 +737,7 @@ def test_hotlog_bootstrap_crash_window_rerolls(spark, tmp_path):
     # but died before dfcnt (its LAST write = the completion probe)
     init_dedup_admission_index(base, idx_b, **init_kwargs)
     shutil.rmtree(f"{idx_b}/dfcnt")
+    _BOOTSTRAP_SEEN.clear()  # the crash ended the process: the probe reads afresh
     for t in ("postings", "bands", "hot"):
         spark.read.parquet(f"{idx_b}/{t}")  # the rest of the bootstrap exists
     _admit_dedup_batch_indexed(b0, 0, base, out_b, idx_b, **kwargs)
@@ -3442,7 +3444,9 @@ def test_pq_generation_cutover_guard(spark, tmp_path):
     ["dedup_indexed", "substring_indexed", "semantic_indexed",
      "fingerprint_indexed", "recompute"],
 )
-def test_admission_sink_single_source_evaluation(spark, tmp_path, admit):
+def test_admission_sink_single_source_evaluation(
+    spark, tmp_path, monkeypatch, admit
+):
     """r15 (VERDICT r14 item 6): pin the one-evaluation-per-micro-batch
     contract. The sink's entry checkpoint is what keeps a Python-backed
     batch source from being re-evaluated by every consumer (rejects
@@ -3452,7 +3456,13 @@ def test_admission_sink_single_source_evaluation(spark, tmp_path, admit):
     up as a bench regression. A counting mapInPandas source + a task
     accumulator make the contract a hard assertion: one partition, one
     evaluation, accumulator == 1 after the whole batch — for every
-    indexed admit function and the shared recompute body."""
+    indexed admit function and the shared recompute body.
+
+    Each indexed admit also pins the bootstrap memo: once the batch
+    that ran ``init_*`` returns, the next batch makes no read of the
+    bootstrap probe path (``_has_base_partition`` reads nothing)."""
+    import sys
+
     from pyspark_ingestion_spark.operators.dedup import (
         incremental_substring_rejects,
     )
@@ -3460,6 +3470,7 @@ def test_admission_sink_single_source_evaluation(spark, tmp_path, admit):
         image_dhash,
         synthesize_bmp_payload,
     )
+    from pyspark_ingestion_spark.streaming import pipeline
     from pyspark_ingestion_spark.streaming.pipeline import (
         _admit_dedup_batch_indexed,
         _admit_fingerprint_batch_indexed,
@@ -3501,39 +3512,55 @@ def test_admission_sink_single_source_evaluation(spark, tmp_path, admit):
         base, src = texts(0, "base"), texts(100, "fresh")
     bdf = src.coalesce(1).mapInPandas(counted, schema)
 
-    if admit == "dedup_indexed":
-        _admit_dedup_batch_indexed(
-            bdf, 0, base, out, idx,
-            id_col="doc_id", text_col="text", n=3, num_hashes=8, band_size=2,
-            threshold_num=1, threshold_den=2, max_doc_freq=5,
-            max_bucket_size=None,
-        )
-    elif admit == "substring_indexed":
-        _admit_substring_batch_indexed(
-            bdf, 0, base, out, idx, id_col="doc_id", text_col="text", k=10,
-            min_len=10, max_window_df=5, sample_mod=None,
-        )
-    elif admit == "semantic_indexed":
-        _admit_semantic_batch_indexed(
-            bdf, 0, base, out, idx, id_col="vec_id", vec_col="embedding",
-            threshold=0.9, n_dims=4,
-        )
-    elif admit == "fingerprint_indexed":
-        _admit_fingerprint_batch_indexed(
-            bdf, 0, base, out, idx, hash_fn=image_dhash,
-            hash_cols=("dh_hi", "dh_lo"), id_col="doc_id", radius=7,
-        )
-    else:
-        _admit_recompute(
-            bdf, 0, base, out, ("doc_id", "text"),
-            lambda corpus, batch: incremental_substring_rejects(
-                corpus, batch, "doc_id", "text", k=10
-            ),
-        )
+    def run(batch_df, bid):
+        if admit == "dedup_indexed":
+            _admit_dedup_batch_indexed(
+                batch_df, bid, base, out, idx,
+                id_col="doc_id", text_col="text", n=3, num_hashes=8,
+                band_size=2, threshold_num=1, threshold_den=2, max_doc_freq=5,
+                max_bucket_size=None,
+            )
+        elif admit == "substring_indexed":
+            _admit_substring_batch_indexed(
+                batch_df, bid, base, out, idx, id_col="doc_id", text_col="text",
+                k=10, min_len=10, max_window_df=5, sample_mod=None,
+            )
+        elif admit == "semantic_indexed":
+            _admit_semantic_batch_indexed(
+                batch_df, bid, base, out, idx, id_col="vec_id",
+                vec_col="embedding", threshold=0.9, n_dims=4,
+            )
+        elif admit == "fingerprint_indexed":
+            _admit_fingerprint_batch_indexed(
+                batch_df, bid, base, out, idx, hash_fn=image_dhash,
+                hash_cols=("dh_hi", "dh_lo"), id_col="doc_id", radius=7,
+            )
+        else:
+            _admit_recompute(
+                batch_df, bid, base, out, ("doc_id", "text"),
+                lambda corpus, batch: incremental_substring_rejects(
+                    corpus, batch, "doc_id", "text", k=10
+                ),
+            )
+
+    run(bdf, 0)
     assert acc.value == 1, (
         f"batch source evaluated {acc.value} times — the sink's entry "
         "checkpoint no longer pins one evaluation per micro-batch"
     )
+    if admit == "recompute":
+        return
+    probe_reads = []
+    real_read = pipeline._read_idx_parquet
+
+    def read(spark_, path):
+        if sys._getframe(1).f_code.co_name == "_has_base_partition":
+            probe_reads.append(path)
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(pipeline, "_read_idx_parquet", read)
+    run(src, 1)
+    assert probe_reads == [], probe_reads
 
 
 @pytest.mark.parametrize("sink", ["hotlog", "substring", "fingerprint"])
